@@ -11,6 +11,9 @@ Coverage requirements (FIXTURES.md §B):
 - timestamps on both sides of a US/Eastern DST boundary;
 - an empty inner selection list (reference would IndexError; the
   engine defaults to "").
+
+The tree becomes an Arrow local relation (:func:`session.local_frame`),
+so each query over it plans a ``LocalTableScan`` and needs no cache.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession
 
 from sports_betting_data_pipeline_spark.schemas import SPORT_EVENT
+from sports_betting_data_pipeline_spark.session import local_frame
 
 
 def _ns(iso: str, micros: int = 0) -> int:
@@ -141,17 +145,6 @@ def betting_tree_rows() -> list[dict]:
     ]
 
 
-_TREE_CACHE: dict[int, DataFrame] = {}
-
-
 def betting_tree_df(spark: SparkSession) -> DataFrame:
-    """Nested fixture as a DataFrame, memoized per session: the
-    Python→JVM conversion of deeply nested rows costs ~1s and the
-    fixture is immutable, so repeated queries (bench, parity, goldens)
-    reuse one converted copy."""
-    key = id(spark)
-    if key not in _TREE_CACHE:
-        _TREE_CACHE[key] = spark.createDataFrame(
-            betting_tree_rows(), schema=SPORT_EVENT
-        ).cache()
-    return _TREE_CACHE[key]
+    """Nested fixture as a local-relation DataFrame (SPORT_EVENT)."""
+    return local_frame(spark, betting_tree_rows(), SPORT_EVENT)

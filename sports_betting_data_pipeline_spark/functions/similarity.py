@@ -21,7 +21,10 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from sports_betting_data_pipeline_spark.session import local_frame
 
 
 def _qname(name: str) -> str:
@@ -33,6 +36,14 @@ def _qname(name: str) -> str:
 # centroid table (~64k × dim doubles) and the per-row assignment work.
 IVF_MIN_CENTROIDS = 8
 IVF_MAX_CENTROIDS = 65536
+
+# The centroid table every IVF helper joins against.
+_CENTROIDS = T.StructType(
+    [
+        T.StructField("cent_id", T.LongType()),
+        T.StructField("cv", T.ArrayType(T.DoubleType())),
+    ]
+)
 
 
 def default_n_centroids(n_rows: int) -> int:
@@ -401,9 +412,7 @@ def kmeans_centroids(
         # no data -> no centroids; downstream IVF probes find nothing.
         # MLlib's .fit would throw on an empty input (fuzz_oracle
         # empty_facts variant).
-        return spark.createDataFrame(
-            [], "cent_id bigint, cv array<double>"
-        )
+        return local_frame(spark, [], _CENTROIDS)
     if n_rows == 1:
         # one point IS the quantizer (MLlib requires k >= 2)
         return corpus.select(
@@ -426,9 +435,7 @@ def kmeans_centroids(
     cent_rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    return spark.createDataFrame(cent_rows, ["cent_id", "cv"]).select(
-        "cent_id", F.col("cv").cast("array<double>").alias("cv")
-    )
+    return local_frame(spark, cent_rows, _CENTROIDS)
 
 
 def _nearest_cells(

@@ -14,7 +14,8 @@ posture is configured once for every caller:
   explicit in the temporal kit so results are reproducible on any
   cluster and comparable against the DuckDB oracle.
 - Arrow enabled — all pandas interchange (Pandas UDFs, toPandas) goes
-  through Arrow batches, never per-row pickling.
+  through Arrow batches, never per-row pickling; driver-built records
+  become Arrow local relations (:func:`local_frame`).
 - Shuffle partitions default to cores for local mode; on a real cluster
   this is overridden per-deployment (or left to AQE's coalescing).
 """
@@ -23,9 +24,11 @@ from __future__ import annotations
 
 import os
 import sys
+from collections.abc import Iterable
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_APP_NAME = "sports-betting-data-pipeline-spark"
 
@@ -153,3 +156,31 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, records: Iterable, schema: T.StructType
+) -> DataFrame:
+    """Driver-side records (dicts, tuples or Rows) as a DataFrame with
+    the DECLARED ``schema``, planned as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a
+    parallelized RDD and re-serializes them through an identity map, so
+    every scan of such a frame runs a Python-worker task under
+    ``Scan ExistingRDD``. Converting the records to an Arrow table on
+    the driver instead makes the frame a local relation the JVM scans
+    without a Python worker. The conversion still rejects None in a
+    non-nullable field and values Arrow cannot coerce to the declared
+    type (a string in a long field); a whole number in a double field
+    lands as a double, as it does when JSON is read.
+    """
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    records = list(records)
+    large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes") == "true"
+    if records:
+        table = LocalDataToArrowConversion.convert(records, schema, large)
+    else:
+        table = to_arrow_schema(schema, prefers_large_types=large).empty_table()
+    return spark.createDataFrame(table, schema=schema)

@@ -13,7 +13,9 @@ Reference parity (SURVEY.md §2.1):
 
 Design: transports are driver-side callables returning parsed JSON
 (list/dict) — network I/O happens once, on the driver, for these
-KB-MB-scale dims; the result becomes a (broadcastable) DataFrame.
+KB-MB-scale dims; the records become an Arrow local relation
+(:func:`session.local_frame`), a broadcastable ``LocalTableScan`` the
+JVM scans without a Python worker.
 Fact-scale data never comes through this path (it arrives as parquet
 or a stream); at 100 TB the dims fetched here are exactly the tables
 you want broadcast-joined against the lake. A transport is any
@@ -32,6 +34,7 @@ from pyspark.sql import types as T
 
 from sports_betting_data_pipeline_spark.functions.odds import odds_ladder
 from sports_betting_data_pipeline_spark.schemas import SPORT_EVENT, TOURNAMENT
+from sports_betting_data_pipeline_spark.session import local_frame
 
 Transport = Callable[[], object]
 
@@ -47,7 +50,10 @@ def snapshot_source(
     fallback_records: Sequence[dict] | None = None,
 ) -> DataFrame:
     """Generic S-scan: call ``transport`` for parsed JSON records and
-    build a DataFrame with the DECLARED schema (never inferred).
+    build a local-relation DataFrame with the DECLARED schema (never
+    inferred). A whole-number JSON value in a double field lands as a
+    double; None in a non-nullable field, or a value of the wrong kind
+    (a string in a long field), raises.
 
     On transport absence or failure, serve ``fallback_records``
     instead — the reference's backup-constants branch
@@ -63,8 +69,8 @@ def snapshot_source(
     if records is None:
         if fallback_records is None:
             raise ValueError("source transport failed and no fallback given")
-        records = list(fallback_records)
-    return spark.createDataFrame(records, schema=schema)
+        records = fallback_records
+    return local_frame(spark, records, schema)
 
 
 def odds_ladder_source(

@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 
 from sports_betting_data_pipeline_spark.io import normalize_events_ts, table_path
 from sports_betting_data_pipeline_spark.schemas import PUSHER_MESSAGE
+from sports_betting_data_pipeline_spark.session import local_frame
 
 # The wire envelope for the Kafka/socket paths: ts travels as an
 # epoch-nanosecond int64 (the reference's Pusher payloads are JSON with
@@ -493,7 +494,7 @@ def latest_per_key_upsert(
         # with nothing new and no prior state): the upsert of nothing
         # is an EMPTY state table, not a read error. Columns match the
         # merge output (_latest_per_user preserves the event schema).
-        return spark.createDataFrame([], events.schema)
+        return local_frame(spark, [], events.schema)
     return spark.read.parquet(state_path)
 
 

@@ -68,6 +68,29 @@ def test_relational_surface_has_no_python_udfs(spark, sf_dir, name):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_driver_built_frames_are_local_relations(spark, sf_dir):
+    """Snapshot sources and the p01 flatten fixture plan as a
+    LocalTableScan the JVM scans itself. ``Scan ExistingRDD`` here means
+    the records went through pickled-RDD construction again, whose
+    every scan runs a Python-worker task that the BatchEvalPython /
+    ArrowEvalPython gates above cannot see."""
+    from sports_betting_data_pipeline_spark.fixtures import betting_tree_rows
+    from sports_betting_data_pipeline_spark.sources import rest
+
+    frames = {
+        "ladder_fallback": rest.odds_ladder_source(spark),
+        "ladder": rest.odds_ladder_source(spark, transport=lambda: [{"odds": 100}]),
+        "tournaments": rest.tournaments_source(spark),
+        "events": rest.events_source(spark, transport=betting_tree_rows),
+        "balance": rest.balance_source(spark, opening=1.0),
+        "p01_flatten_sheet": QUERIES["p01_flatten_sheet"](spark, sf_dir),
+    }
+    for name, df in frames.items():
+        plan = plan_text(df, "simple")
+        assert "LocalTableScan" in plan, (name, plan)
+        assert "Scan ExistingRDD" not in plan, (name, plan)
+
+
 def test_topk_uses_window_group_limit(spark, sf_dir):
     # the partial top-k optimization must kick in before the shuffle
     plan = plan_text(QUERIES["w01_topk_per_group"](spark, sf_dir), "simple")

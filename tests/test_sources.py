@@ -8,11 +8,12 @@ import pytest
 from sports_betting_data_pipeline_spark.functions.odds import odds_ladder
 from sports_betting_data_pipeline_spark.sources.rest import (
     balance_source,
+    events_source,
     odds_ladder_source,
     snapshot_source,
     tournaments_source,
 )
-from sports_betting_data_pipeline_spark.schemas import TOURNAMENT
+from sports_betting_data_pipeline_spark.schemas import SPORT_EVENT, TOURNAMENT, WAGER
 
 
 def test_ladder_falls_back_on_transport_failure(spark):
@@ -34,8 +35,12 @@ def test_tournaments_declared_schema(spark):
     df = tournaments_source(spark, transport=lambda: recs)
     assert df.schema == TOURNAMENT
     assert df.count() == 1
-    # no transport -> empty, same schema (mm_calls.py:73-75 miss path)
+    # no transport, or an empty one -> empty, same schema
+    # (mm_calls.py:73-75 miss path)
     assert tournaments_source(spark).count() == 0
+    empty = tournaments_source(spark, transport=lambda: [])
+    assert empty.schema == TOURNAMENT
+    assert empty.collect() == []
 
 
 def test_balance_scalar_and_missing_fallback(spark):
@@ -43,6 +48,88 @@ def test_balance_scalar_and_missing_fallback(spark):
     assert row.balance == 250.0
     with pytest.raises(ValueError):
         snapshot_source(spark, None, TOURNAMENT, fallback_records=None)
+
+
+def test_events_source_widens_whole_number_into_double(spark):
+    """JSON has one number type: ``"line": 5`` must land in the DOUBLE
+    ``line`` field as 5.0 instead of failing the whole snapshot."""
+    recs = [
+        {
+            "event_id": 1,
+            "markets": [
+                {"id": "m", "market_lines": [{"id": "ml", "line": 5}],
+                 "selections": [[{"line_id": "s", "odds": -110, "stake": 2}]]}
+            ],
+        }
+    ]
+    [row] = events_source(spark, transport=lambda: recs).collect()
+    [market] = row.markets
+    assert market.market_lines[0].line == 5.0
+    assert isinstance(market.market_lines[0].line, float)
+    assert market.selections[0][0].stake == 2.0
+
+
+def test_snapshot_source_rejects_null_and_wrong_kind(spark):
+    """Declared nullability and field kinds are still enforced at the
+    boundary: the LADDER ``odds`` field is non-nullable, and a string
+    cannot land in a LongType field."""
+    with pytest.raises(ValueError):
+        odds_ladder_source(spark, transport=lambda: [{"odds": None}])
+    with pytest.raises((ValueError, TypeError)):
+        events_source(spark, transport=lambda: [{"event_id": "abc"}])
+
+
+def _parity_cases():
+    """Records shaped like a REST snapshot: the flatten fixture covers
+    both flatten branches, null optionals, an empty inner selection
+    list and DST-edge instants; WAGER carries a naive ``ts`` (one on
+    each side of the 2024 US spring-forward and fall-back edges)."""
+    import datetime
+
+    from sports_betting_data_pipeline_spark.fixtures import betting_tree_rows
+    from sports_betting_data_pipeline_spark.sources.rest import (
+        BALANCE_SCHEMA,
+        LADDER_SCHEMA,
+    )
+
+    events = betting_tree_rows()
+    stubs = [{k: e[k] for k in ("event_id", "name", "display_name")} for e in events]
+    naive = [
+        datetime.datetime(2024, 3, 10, 6, 59, 59),
+        datetime.datetime(2024, 3, 10, 7, 0, 0, 250),
+        datetime.datetime(2024, 11, 3, 5, 30),
+        datetime.datetime(2024, 11, 3, 6, 30),
+    ]
+    wagers = [
+        {"external_id": f"x{i}", "wager_id": None if i % 2 else f"w{i}",
+         "line_id": f"L{i}", "odds": None if i == 3 else -110 + i,
+         "stake": 5.0 + i, "action": "place", "ts": ts}
+        for i, ts in enumerate(naive)
+    ] + [{"external_id": "x9", "wager_id": None, "line_id": None, "odds": None,
+          "stake": None, "action": "cancel", "ts": None}]
+    return [
+        ("events", SPORT_EVENT, events),
+        ("tournaments", TOURNAMENT,
+         [{"id": 1, "name": "NBA", "sport_events": stubs},
+          {"id": 2, "name": "Cup", "sport_events": events},
+          {"id": 3, "name": "Empty", "sport_events": None}]),
+        ("wagers", WAGER, wagers),
+        ("ladder", LADDER_SCHEMA, [{"odds": v} for v in odds_ladder()[:5]]),
+        ("balance", BALANCE_SCHEMA, [{"balance": 250.0}]),
+    ]
+
+
+@pytest.mark.parametrize("case", _parity_cases(), ids=lambda c: c[0])
+def test_local_frame_matches_pickled_create(spark, case):
+    """The Arrow local relation collects exactly what the pickled-RDD
+    ``createDataFrame`` collects, under an identical schema."""
+    from sports_betting_data_pipeline_spark.session import local_frame
+
+    _, schema, records = case
+    got = local_frame(spark, records, schema)
+    want = spark.createDataFrame(records, schema=schema)
+    assert got.schema == want.schema == schema
+    assert got.collect() == want.collect()
 
 
 def test_json_and_csv_roundtrip_match_parquet(spark, sf_dir, tmp_path):
