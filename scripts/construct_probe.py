@@ -55,12 +55,16 @@ def main() -> int:
     spark.range(1).count()
 
     names = args.names or [n for n in sorted(QUERIES) if n not in LOOPY]
-    # one cold pass to warm py4j / fixture table cache / memos
+    # one cold pass to warm py4j / fixture table cache / memos; a builder
+    # that raises here is skipped, not re-raised by the timing loop
+    failed = set()
     for n in names:
         try:
             QUERIES[n](spark, args.sf_dir)
         except Exception as e:  # noqa: BLE001
             print(f"SKIP {n}: {e}", file=sys.stderr)
+            failed.add(n)
+    names = [n for n in names if n not in failed]
 
     timings: dict[str, float] = {}
     for n in names:

@@ -1398,13 +1398,14 @@ def l22_lsh_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trees (l21/l55's single blocked self-join) the same flip
     # measured flat-to-negative — the extra edge materialization only
     # pays where the truncated subtree is large.
-    # r12: eager=False — construction stays lazy, so plan-only
-    # consumers (explain tooling, the plan pins, the driver's schema
-    # gate) no longer execute the LSH join at build time (ADVICE r11
-    # #2), and the checkpoint materializes inside the first action,
-    # removing one synchronous job barrier: interleaved A/B 2.30 ->
-    # 2.04 s min at sf0.1, identical 477 components. The downstream
-    # plan hangs off the RDD leaf either way.
+    # r12: eager=False — no separate checkpoint-count job, which
+    # removed one synchronous job barrier: interleaved A/B 2.30 ->
+    # 2.04 s min at sf0.1, identical 477 components. Construction is
+    # NOT job-free: under AQE, building the checkpoint RDD still runs
+    # the checkpointed subtree's shuffle stages while the builder runs
+    # (13 construction jobs on the perfbench llm_dedup inputs), so
+    # plan-only consumers still run the LSH join's stages at build time.
+    # The downstream plan hangs off the RDD leaf either way.
     pairs = pairs.localCheckpoint(eager=False)
     # size_hint: corpus row count from the scan's parquet footer
     # metadata (io.size_hint — catalog statistics, no job), ×32 as a
@@ -2136,13 +2137,14 @@ def pl02_corpus_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A/B from 4.46 to 2.88 s min at sf0.1 with identical rows; the
     # recompute-on-failure durability tradeoff matches the CC loop's
     # documented localCheckpoint use.
-    # r12: eager=False — construction stays lazy, so plan-only
-    # consumers (explain tooling, plan pins, the driver's schema gate)
-    # no longer execute the whole decontam pipeline at build time
-    # (ADVICE r11 #2), and the checkpoints materialize inside the
-    # first action, removing two synchronous job barriers: interleaved
-    # A/B 2.32 -> 1.83 s min at sf0.1, identical 296 rows. The
-    # downstream plan hangs off the RDD leaves either way.
+    # r12: eager=False — no separate checkpoint-count jobs, which
+    # removed two synchronous job barriers: interleaved A/B 2.32 ->
+    # 1.83 s min at sf0.1, identical 296 rows. Construction is NOT
+    # job-free: under AQE, building each checkpoint RDD still runs the
+    # checkpointed subtree's shuffle stages while the builder runs (15
+    # construction jobs on the perfbench llm_dedup inputs), so
+    # plan-only consumers still run the decontam pipeline's stages at
+    # build time. The downstream plan hangs off the RDD leaves either way.
     good = (
         deduped.filter(F.round(quality_score(F.col("text")), 6) >= 0.5)
         .select(

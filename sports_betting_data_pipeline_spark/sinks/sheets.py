@@ -3,38 +3,51 @@
 Reference parity (SURVEY.md §2.2):
 - K1 Google Sheets append (src/main.py:23-37): `values().append` at
   `{sheet}!A1` with RAW input — a header row then stringified data
-  rows. Here: an append-mode writer that renders every cell to its
-  RAW string form (the reference's list-of-lists shape) and spools
-  one CSV part per partition. The actual Sheets HTTP transport is a
+  rows. Here: Spark's CSV writer renders every cell to its RAW string
+  form (the reference's list-of-lists shape) and spools one CSV part
+  per non-empty partition. The actual Sheets HTTP transport is a
   pluggable callable — the engine owns batching/formatting, not auth.
 - K2/K3 single + batched wager POST (src/mm_calls.py:247-280): a
   ``foreachPartition`` sink that buffers rows into fixed-size batches
   (the reference batches 3 wagers per POST) and hands each batch to a
   transport callable. Executor-side, no driver collect.
 
-Scale notes: both sinks are `foreachPartition`-shaped — per-partition
-connections, batched calls, no per-row round trips (the reference's
-own batch POST is the hint). Spooled parts are written atomically
-(tmp + rename) so a retried task can't leave half a file; retries may
-duplicate whole parts — at-least-once, same as any side-effecting
-sink without an idempotent endpoint.
+Scale notes: both sinks work per partition on the executors —
+per-partition files or connections, batched calls, no per-row round
+trips (the reference's own batch POST is the hint). Sheet parts go
+through Spark's commit protocol into a staging directory and are
+renamed into the sheet only after the job commits, so a retried task
+can neither leave half a file nor duplicate a part. The batched POST
+is at-least-once, same as any side-effecting sink without an
+idempotent endpoint.
 """
 
 from __future__ import annotations
 
 import csv
-import io
+import itertools
 import os
+import shutil
 import uuid
 from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, Row
+from pyspark.sql import functions as F
 
 
 def _raw(value: object) -> str:
     """RAW value rendering (K1: valueInputOption='RAW'): empty string
     for null — the reference's `.get(k, "")` defaulting."""
     return "" if value is None else str(value)
+
+
+def _has_rows(part: str, header: bool) -> bool:
+    """Whether a CSV part holds a data row. Spark writes partition 0
+    even when it is empty: the header alone, or nothing without one."""
+    with open(part, newline="", encoding="utf-8") as fh:
+        # NUL is no CSV delimiter; Python 3.10's csv.reader rejects it
+        rows = csv.reader(line.replace("\0", "") for line in fh)
+        return next(itertools.islice(rows, int(header), None), None) is not None
 
 
 def sheet_append(
@@ -45,40 +58,48 @@ def sheet_append(
 ) -> list[str]:
     """K1: append a DataFrame to a local "sheet" spool.
 
-    Writes one CSV part per partition under ``spool_dir/sheet/``
-    (atomic tmp+rename), data rows in RAW string form. The header row
-    is written once, driver-side (the reference prepends it to every
-    append, src/main.py:50-78 — we keep the header-first layout but
-    only in part files that carry rows). Returns the part paths.
+    Spark's CSV writer writes one part per non-empty partition under
+    ``spool_dir/sheet/``, on the executors and with no Python worker.
+    Every cell is RAW (K1: valueInputOption='RAW'): Spark's string cast
+    of the value, null as "" (the reference's `.get(k, "")` defaulting).
+    So booleans render as ``true``/``false``, doubles as Spark prints
+    them (``1.0E10``) and timestamps as ``2024-03-10 02:30:05`` in the
+    session time zone, as the flatten already renders Odds/Stake/Value.
+    Cells holding a comma, quote, ``\n`` or ``\r`` are quoted, with
+    embedded quotes doubled. With ``include_header`` every part starts
+    with the header row (the reference prepends it to every append,
+    src/main.py:50-78 — we keep the header-first layout, but only in
+    parts that carry rows). Returns the sorted part paths.
     """
     target = os.path.join(spool_dir, sheet)
     os.makedirs(target, exist_ok=True)
-    columns = list(df.columns)
-
-    def write_partition(rows: Iterator[Row]) -> Iterator[str]:
-        # csv.writer with QUOTE_MINIMAL: free-form cells (event/market
-        # display names) containing commas, quotes, or newlines are
-        # quoted/escaped instead of silently corrupting the part file.
-        sink = io.StringIO()
-        writer = csv.writer(sink, quoting=csv.QUOTE_MINIMAL, lineterminator="\n")
-        if include_header:
-            writer.writerow(columns)
-        n_data = 0
-        for row in rows:
-            writer.writerow([_raw(v) for v in row])
-            n_data += 1
-        if n_data == 0:
-            return iter(())
-        part = f"part-{uuid.uuid4().hex}.csv"
-        tmp = os.path.join(target, "." + part + ".tmp")
-        final = os.path.join(target, part)
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(sink.getvalue())
-        os.replace(tmp, final)
-        return iter([final])
-
-    # mapPartitions (not foreachPartition) so the part paths come back.
-    return sorted(df.rdd.mapPartitions(write_partition).collect())
+    staging = os.path.join(target, f".staging-{uuid.uuid4().hex}")
+    as_text = df.select(
+        [F.col(f"`{c.replace('`', '``')}`").cast("string").alias(c) for c in df.columns]
+    )
+    try:
+        as_text.write.csv(
+            staging,
+            header=include_header,
+            quote='"',
+            escape='"',
+            ignoreLeadingWhiteSpace=False,
+            ignoreTrailingWhiteSpace=False,
+            emptyValue="",
+            nullValue="",
+            lineSep="\n",
+        )
+        # _SUCCESS, the .crc checksums and the parts without rows stay
+        # behind and go with the staging directory
+        parts = []
+        for name in sorted(os.listdir(staging)):
+            if name.startswith("part-") and _has_rows(os.path.join(staging, name), include_header):
+                part = os.path.join(target, name)
+                os.replace(os.path.join(staging, name), part)
+                parts.append(part)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return parts
 
 
 def foreach_partition_batched(
@@ -277,14 +298,3 @@ class SpoolTransport:
             for item in batch:
                 fh.write(json.dumps(item, default=str) + "\n")
         os.replace(tmp, part)
-
-
-def cancel_merge(wagers: DataFrame, cancels: DataFrame) -> DataFrame:
-    """K4 as MERGE ... WHEN MATCHED DELETE semantics (see
-    operators/wagers.apply_cancellations; re-exported here so the sink
-    module presents the full K-surface)."""
-    from sports_betting_data_pipeline_spark.operators.wagers import (
-        apply_cancellations,
-    )
-
-    return apply_cancellations(wagers, cancels)

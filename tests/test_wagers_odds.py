@@ -282,6 +282,127 @@ def test_sheet_append_quotes_freeform_cells(spark, tmp_path):
     assert data == [["1", 'Team A, "The Champs"', "line1\nline2"], ["2", "plain", "ok"]]
 
 
+# Byte-level golden for the RAW CSV rendering. Every cell but the lone
+# carriage return matches what Python's csv.writer (QUOTE_MINIMAL,
+# lineterminator "\n") wrote byte for byte; that writer left "cr\rx"
+# unquoted, so csv.reader split its row in two.
+_GOLDEN_CELLS = [
+    "a,b",
+    'say "hi"',
+    '"',
+    "l1\nl2",
+    "l1\r\nl2",
+    "cr\rx",
+    " lead",
+    "trail ",
+    "t\tab",
+    "",
+    None,
+    "NA",
+    "#hash",
+    "h\u00e9llo \u2713",
+    "nu\x00l",
+]
+_GOLDEN_BYTES = (
+    b"i,cell,tail\n"
+    b'0,"a,b",z\n'
+    b'1,"say ""hi""",z\n'
+    b'2,"""",z\n'
+    b'3,"l1\nl2",z\n'
+    b'4,"l1\r\nl2",z\n'
+    b'5,"cr\rx",z\n'
+    b"6, lead,z\n"
+    b"7,trail ,z\n"
+    b"8,t\tab,z\n"
+    b"9,,z\n"
+    b"10,,z\n"
+    b"11,NA,z\n"
+    b"12,#hash,z\n"
+    b"13,h\xc3\xa9llo \xe2\x9c\x93,z\n"
+    b"14,nu\x00l,z\n"
+)
+
+
+def _golden_frame(spark):
+    rows = [(i, c, "z") for i, c in enumerate(_GOLDEN_CELLS)]
+    return spark.createDataFrame(rows, "i long, cell string, tail string").coalesce(1)
+
+
+def test_sheet_append_golden_bytes(spark, tmp_path):
+    parts = sheet_append(_golden_frame(spark), str(tmp_path), "golden")
+    assert len(parts) == 1
+    with open(parts[0], "rb") as fh:
+        assert fh.read() == _GOLDEN_BYTES
+
+
+def test_sheet_append_lone_carriage_return_round_trips(spark, tmp_path):
+    import csv as _csv
+
+    df = spark.createDataFrame([(8, "cr\rx", "z")], "a long, b string, c string")
+    parts = sheet_append(df.coalesce(1), str(tmp_path), "cr")
+    with open(parts[0], newline="", encoding="utf-8") as fh:
+        assert list(_csv.reader(fh)) == [["a", "b", "c"], ["8", "cr\rx", "z"]]
+
+
+def test_sheet_append_without_header(spark, tmp_path):
+    parts = sheet_append(
+        _golden_frame(spark), str(tmp_path), "nohdr", include_header=False
+    )
+    with open(parts[0], "rb") as fh:
+        assert fh.read() == _GOLDEN_BYTES.split(b"\n", 1)[1]
+
+
+def test_sheet_append_empty_frame_leaves_no_file(spark, tmp_path):
+    df = spark.createDataFrame([(1, "x")], "a long, b string").limit(0)
+    for header in (True, False):
+        sheet = f"empty_{header}"
+        assert sheet_append(df, str(tmp_path), sheet, include_header=header) == []
+        assert os.listdir(tmp_path / sheet) == []
+
+
+def test_sheet_append_leaves_only_data_parts(spark, tmp_path):
+    # 2 rows over 4 partitions: Spark also writes a header-only part for
+    # the empty partition 0, plus _SUCCESS and .crc files when staging
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "a long, b string")
+    df = df.repartition(4).sortWithinPartitions("a")
+    parts = sheet_append(df, str(tmp_path), "sheet3")
+    target = tmp_path / "sheet3"
+    assert sorted(os.listdir(target)) == sorted(os.path.basename(p) for p in parts)
+    assert all(os.path.dirname(p) == str(target) for p in parts)
+    rows = []
+    for p in parts:
+        lines = open(p).read().splitlines()
+        assert lines[0] == "a,b" and len(lines) > 1
+        rows += lines[1:]
+    assert sorted(rows) == ["1,a", "2,b"]
+    # a second append to the same sheet adds parts, it replaces none
+    more = sheet_append(df, str(tmp_path), "sheet3")
+    assert not set(more) & set(parts)
+    assert len(os.listdir(target)) == len(parts) + len(more)
+
+
+def test_sheet_append_typed_cells_use_spark_string_cast(spark, tmp_path):
+    df = spark.sql(
+        "SELECT true AS b, CAST(1e10 AS DOUBLE) AS d, CAST(0.1 AS DOUBLE) AS e, "
+        "TIMESTAMP'2024-03-10 02:30:05' AS t, CAST(NULL AS BOOLEAN) AS n"
+    )
+    parts = sheet_append(df, str(tmp_path), "typed")
+    assert open(parts[0]).read() == "b,d,e,t,n\ntrue,1.0E10,0.1,2024-03-10 02:30:05,\n"
+
+
+def test_sheet_append_runs_no_python_worker(spark, tmp_path, monkeypatch):
+    from pyspark.sql import DataFrame
+
+    def no_rdd(self):
+        raise AssertionError("sheet_append must not go through DataFrame.rdd")
+
+    df = _golden_frame(spark)
+    monkeypatch.setattr(DataFrame, "rdd", property(no_rdd))
+    parts = sheet_append(df, str(tmp_path), "jvm")
+    with open(parts[0], "rb") as fh:
+        assert fh.read() == _GOLDEN_BYTES
+
+
 def test_foreach_partition_batched_sizes(spark, tmp_path):
     spool = str(tmp_path / "posts")
     df = spark.createDataFrame([(i,) for i in range(7)], ["n"]).coalesce(1)
