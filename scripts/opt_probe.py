@@ -4,7 +4,7 @@
 Usage:
   python scripts/opt_probe.py --label before --top 30
   python scripts/opt_probe.py --label after q01_pricing_summary l12_embedding_neardup
-  python scripts/opt_probe.py --ab qname   # interleaved A/B vs a module override
+  python scripts/ab_regressions.py q1 q2   # interleaved A/B (a separate script)
 
 For each selected query this writes plans/r12/<name>_<label>.txt with
 the .explain("formatted") output and times the query with the noop sink

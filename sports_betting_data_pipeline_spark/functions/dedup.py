@@ -37,11 +37,6 @@ from sports_betting_data_pipeline_spark.functions.text import (
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
-def exact_dedupe(df: DataFrame, subset: Sequence[str]) -> DataFrame:
-    """Keep one arbitrary row per distinct subset (dropDuplicates)."""
-    return df.dropDuplicates(list(subset))
-
-
 def exact_dedupe_canonical(
     df: DataFrame, key: str, subset: Sequence[str]
 ) -> DataFrame:
@@ -228,12 +223,6 @@ def minhash_signature_from_shingles(
             lambda a, b: F.least(a, b),
         ),
     )
-
-
-def minhash_signature(text: Column, k: int = 3, num_hashes: int = 32) -> Column:
-    """MinHash signature of a text column's k-shingles (one-pass fold,
-    see :func:`minhash_signature_from_shingles`)."""
-    return minhash_signature_from_shingles(shingles(text, k), num_hashes)
 
 
 def minhash_estimated_sim(sig_a: Column, sig_b: Column) -> Column:
@@ -1134,7 +1123,7 @@ def connected_components(
     # dedup-edge scale (measured 2.9 s → 0.9 s on a 249-edge list,
     # SCALE.md §Round-7). The count comes either from ``size_hint``
     # (an UPPER BOUND on edge rows, e.g. the corpus row count read
-    # from parquet footer metadata — io.table_row_count; catalog
+    # from parquet footer metadata — io.size_hint; catalog
     # statistics, no job) or from one count job that also materializes
     # the persisted edges. The hint is strictly better when available:
     # no extra job, AND the small-regime conf is active while the

@@ -168,16 +168,6 @@ def lang_id(text: Column) -> Column:
     return F.transform(F.array(dtoks), score_and_decide)[0]
 
 
-def fingerprint64(text: Column) -> Column:
-    """Exact 64-bit document fingerprint of case/whitespace-normalized
-    text (xxhash64 — stable across runs and partitionings). NULL text
-    fingerprints to NULL (content unknown ≠ content empty — the SQL
-    null-propagation contract; ``concat_ws`` alone would silently
-    collapse NULL to the empty-text fingerprint)."""
-    normalized = F.concat_ws(" ", ws_tokens(F.lower(text)))
-    return F.when(text.isNotNull(), F.xxhash64(normalized))
-
-
 def shingles_sql(t: str, k: int = 3) -> str:
     """SQL text of :func:`shingles` over an arbitrary SQL expression
     ``t`` (same let-binding structure, same tree — one parse call)."""

@@ -19,6 +19,9 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,14 +98,36 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# (appId, semanticHash, columns) -> scan partition count; see
-# widen_for_compute. Bounded by the catalog's distinct widen inputs in
-# one application; _WIDEN_MEMO_MAX guards the pathological long-lived
-# process cycling many applications (VERDICT r11 next-#8): on overflow,
-# dead-application entries are dropped first, then the whole memo — a
-# miss only re-pays the 77 ms probe, never changes results.
-_WIDEN_MEMO: dict[tuple, int] = {}
-_WIDEN_MEMO_MAX = 4096
+# The engine's one driver-side metadata memo: key -> (stamp, value),
+# shared by load_table, widen_for_compute, size_hint's footer counts and
+# the events stream schema. Staleness lives in the VALUE: a hit needs an
+# equal stamp, and a changed stamp overwrites its entry in place instead
+# of stranding the old value. At _MEMO_MAX entries the least recently
+# used one is evicted. Every value is re-derivable metadata, so a miss
+# only re-pays its probe and never changes results.
+_MEMO: OrderedDict[tuple, tuple[object, object]] = OrderedDict()
+_MEMO_MAX = 4096
+_MEMO_LOCK = threading.Lock()
+
+
+def _memo(key: tuple, stamp, compute: Callable[[], object]):
+    """``compute()``, memoized under ``key`` while ``stamp`` is
+    unchanged. The lock guards lookup and insert only: ``compute`` runs
+    outside it, so two threads missing the same key may both compute
+    (the later insert wins) but a slow probe never blocks other keys."""
+    with _MEMO_LOCK:
+        hit = _MEMO.get(key)
+        if hit is not None and hit[0] == stamp:
+            _MEMO.move_to_end(key)
+            return hit[1]
+    value = compute()
+    with _MEMO_LOCK:
+        if key not in _MEMO:
+            while len(_MEMO) >= _MEMO_MAX:
+                _MEMO.popitem(last=False)
+        _MEMO[key] = (stamp, value)
+        _MEMO.move_to_end(key)
+    return value
 
 
 def widen_for_compute(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -132,48 +157,33 @@ def widen_for_compute(df: DataFrame, min_parts: int | None = None) -> DataFrame:
         # this helper at 14 sites, twice per query for the self-join
         # bases, on EVERY plan construction (bench runs construct
         # fresh per timed run). Memoize the count per (application,
-        # semantic plan, columns): the probe is pure scan metadata, so
-        # a memo hit can at worst make a stale widen DECISION (perf,
-        # never results) — and only if the same fixture path is
-        # rewritten with a different row-group layout inside one
+        # semantic plan, columns) with no stamp: the probe is pure scan
+        # metadata, so a memo hit can at worst make a stale widen
+        # DECISION (perf, never results) — and only if the same fixture
+        # path is rewritten with a different row-group layout inside one
         # application, which only the fuzz harness does (it uses fresh
         # per-variant paths, which change the semantic hash).
         key = (
+            "widen",
             spark.sparkContext.applicationId,
             df.semanticHash(),
             tuple(df.columns),
         )
-        n = _WIDEN_MEMO.get(key)
-        if n is None:
-            n = df.rdd.getNumPartitions()
-            if len(_WIDEN_MEMO) >= _WIDEN_MEMO_MAX:
-                app = key[0]
-                stale = [k for k in _WIDEN_MEMO if k[0] != app]
-                for k in stale:
-                    del _WIDEN_MEMO[k]
-                if len(_WIDEN_MEMO) >= _WIDEN_MEMO_MAX:
-                    _WIDEN_MEMO.clear()
-            _WIDEN_MEMO[key] = n
+        n = _memo(key, None, lambda: df.rdd.getNumPartitions())
     except Exception:
         return df.repartition(target)  # streaming: no partition metadata
     return df if n >= target else df.repartition(target)
 
 
-# key -> (fingerprint, df): staleness lives in the VALUE, not the key,
-# so a regenerated fixture OVERWRITES its entry instead of stranding the
-# old DataFrame (plan object + session reference) forever — the cache is
-# bounded at one entry per (app, dir, table).
-_TABLE_CACHE: dict[tuple, tuple[tuple[int, int], DataFrame]] = {}
-
-
 def _dir_fingerprint(path: str) -> tuple[int, int]:
     """(max mtime_ns, entry count) of a table path — the staleness
-    stamp for :func:`load_table`'s memo (ADVICE r6: a fixture dir
-    regenerated within one Spark application must not be served from
-    the memoized listing; same hazard class st16's mtime stamp
-    guards). A flat parquet dir is one ``scandir``; a missing path
-    fingerprints as (0, 0) and lets ``spark.read`` raise its own
-    error. Single files (a bare .parquet) stamp their own stat."""
+    stamp for :func:`load_table` and :func:`_events_file_schema`
+    (ADVICE r6: a fixture dir regenerated within one Spark application
+    must not be served from the memoized listing; same hazard class
+    st16's mtime stamp guards). A flat parquet dir is one ``scandir``;
+    a missing path fingerprints as (0, 0) and lets ``spark.read`` raise
+    its own error. Single files (a bare .parquet) stamp their own
+    stat."""
     try:
         st = os.stat(path)
         if not os.path.isdir(path):
@@ -216,80 +226,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ensure_engine_confs(spark)
     path = table_path(sf_dir, name)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
+
+    def resolve() -> DataFrame:
+        df = spark.read.parquet(path)
+        return normalize_events_ts(df) if name == "events" else df
+
+    key = ("table", spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
+    return _memo(key, _dir_fingerprint(path), resolve)
+
+
+def _events_file_schema(spark: SparkSession, sf_dir: str):
+    """Footer-read the raw events schema (before
+    :func:`normalize_events_ts`) for the file stream source, memoized
+    per ABSOLUTE fixture dir on the :func:`load_table` stamp: a fixture
+    regenerated mid-process that switches generations (ns-as-long
+    bigint ts ↔ timestamp[us]) re-resolves instead of serving a stale
+    reader schema."""
+    path = table_path(os.path.abspath(sf_dir), "events")
+    return _memo(
+        ("events_schema", path),
+        _dir_fingerprint(path),
+        lambda: spark.read.parquet(path).schema,
     )
-    stamp = _dir_fingerprint(path)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    df = spark.read.parquet(path)
-    if name == "events":
-        df = normalize_events_ts(df)
-    _TABLE_CACHE[key] = (stamp, df)
-    return df
-
-
-_ROW_COUNT_CACHE: dict[str, tuple[tuple[int, int], int]] = {}
-
-
-def table_row_count(sf_dir: str, name: str) -> int | None:
-    """Row count of a fixture table from its parquet FOOTER metadata —
-    driver-side, no Spark job, memoized on the directory fingerprint.
-
-    This is the engine's stand-in for catalog table statistics: a
-    cost-based planner reads exactly this number from the metastore
-    before picking a physical strategy. Callers use it as a SIZE HINT
-    for plan-time posture decisions (e.g.
-    ``connected_components(size_hint=...)`` sizing its label-loop
-    shuffles); at warehouse scale the count is huge and every hint
-    saturates to the session's configured parallelism, so nothing
-    changes — the hint only matters in the small regime it measures.
-    Returns None when the footprint can't be read (caller falls back
-    to measuring with a job)."""
-    path = table_path(sf_dir, name)
-    key = os.path.abspath(path)
-    stamp = _dir_fingerprint(path)
-    hit = _ROW_COUNT_CACHE.get(key)
-    n = hit[1] if hit is not None and hit[0] == stamp else None
-    if n is None:
-        try:
-            import pyarrow.parquet as pq
-
-            if os.path.isdir(path):
-                n = 0
-                with os.scandir(path) as it:
-                    for e in it:
-                        if e.name.endswith(".parquet") and not e.name.startswith(
-                            (".", "_")
-                        ):
-                            n += pq.ParquetFile(e.path).metadata.num_rows
-            else:
-                n = pq.ParquetFile(path).metadata.num_rows
-        except Exception:
-            return None
-        _ROW_COUNT_CACHE[key] = (stamp, n)
-    return n
-
-
-_FILE_ROWS_CACHE: dict[str, tuple[tuple[int, int], int]] = {}
 
 
 def size_hint(df: DataFrame) -> int | None:
     """Row-count upper bound for ``df`` from the parquet FOOTERS of its
     plan's input files — driver-side metadata only, no Spark job.
 
-    This generalizes :func:`table_row_count` from "a named fixture
-    table" to "whatever ``df`` actually scans", so strategy switches
+    This is the engine's stand-in for catalog table statistics: a
+    cost-based planner reads exactly this bound from the metastore
+    before picking a physical strategy. Strategy switches
     (:func:`functions.corpus.deterministic_shuffle`'s single-partition
     rank path, :func:`session.latency_regime`'s small-regime confs, the
-    connected-components loop sizing) are DEFAULT behavior instead of
-    caller discipline: plans pass ``size_hint(docs)`` rather than
-    hand-threading ``table_row_count(sf_dir, "documents")``. It is the
-    same CBO stand-in — a cost-based planner reads exactly this bound
-    from the metastore before picking a physical strategy.
+    connected-components loop sizing) read it from whatever ``df``
+    actually scans, so they are DEFAULT behavior instead of caller
+    discipline. At warehouse scale the bound is huge and every hint
+    saturates to the session's configured parallelism.
 
     The bound is the total footer row count of ``df.inputFiles()``:
     filters/joins/aggregates downstream only ever see at most the
@@ -320,21 +293,14 @@ def size_hint(df: DataFrame) -> int | None:
             return None
         try:
             st = os.stat(path)
-            stamp = (st.st_mtime_ns, st.st_size)
-            hit = _FILE_ROWS_CACHE.get(path)
-            if hit is not None and hit[0] == stamp:
-                total += hit[1]
-                continue
-            n = pq.ParquetFile(path).metadata.num_rows
-            _FILE_ROWS_CACHE[path] = (stamp, n)
-            total += n
+            total += _memo(
+                ("file_rows", path),
+                (st.st_mtime_ns, st.st_size),
+                lambda: pq.ParquetFile(path).metadata.num_rows,
+            )
         except Exception:
             return None
     return total
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

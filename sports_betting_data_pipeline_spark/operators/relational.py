@@ -50,12 +50,6 @@ def semi_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFra
     return left.join(F.broadcast(right), on=on, how="left_semi")
 
 
-def anti_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:
-    """NOT EXISTS — the cancel-all/`key not in wagers` guard shape
-    (mm_calls.py:305-306) as a set operation."""
-    return left.join(F.broadcast(right), on=on, how="left_anti")
-
-
 def enrich_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -81,21 +75,9 @@ def deterministic_sample(df: DataFrame, key: str, keep: int, out_of: int) -> Dat
     The reference samples with ``random.random() < 0.3``
     (mm_calls.py:241). For oracle-reproducible pipelines we use a
     key-modulo filter (deterministic, partition-independent, and
-    expressible in ANSI SQL); use :func:`bernoulli_sample` when true
-    randomness is wanted.
+    expressible in ANSI SQL).
     """
     return df.filter(F.pmod(F.col(key), F.lit(out_of)) < F.lit(keep))
-
-
-def bernoulli_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """F6/F7: per-row Bernoulli sample (mm_calls.py:241, 309)."""
-    return df.sample(fraction=fraction, seed=seed)
-
-
-def random_topk(df: DataFrame, k: int, seed: int = 42) -> DataFrame:
-    """F7: pick up to k random rows (``random.choices(k=min(4, n))``,
-    mm_calls.py:333)."""
-    return df.orderBy(F.rand(seed)).limit(k)
 
 
 def topk_per_group(
@@ -178,15 +160,6 @@ def salted_join(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
     )
     return salted_l.join(salted_r, on=[on, "_salt"], how=how).drop("_salt")
-
-
-def dedupe_exact(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Exact dedup: hash-shuffle on the subset columns, keep one row.
-
-    At 100 TB this is one shuffle on the dedup key; prefer listing the
-    minimal key subset so the shuffle payload stays narrow.
-    """
-    return df.dropDuplicates(list(subset) if subset else None)
 
 
 def stratified_sample(

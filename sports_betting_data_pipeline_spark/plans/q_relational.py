@@ -14,7 +14,6 @@ from pyspark.sql.window import Window
 
 from sports_betting_data_pipeline_spark.io import load_table
 from sports_betting_data_pipeline_spark.operators.relational import (
-    anti_join,
     csv_concat_per_group,
     deterministic_sample,
     enrich_join,

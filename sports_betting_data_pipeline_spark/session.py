@@ -50,7 +50,7 @@ def latency_regime(spark: SparkSession, n_rows: int | None):
     0.9 s on a 249-edge CC loop) and the shuffle-partition count (task
     scheduling for 32 empty partitions per stage). This context
     manager sizes both ONCE from a row-count upper bound — parquet
-    footer statistics (:func:`io.table_row_count`) or one count job —
+    footer statistics (:func:`io.size_hint`) or one count job —
     the engine's stand-in for metastore table statistics feeding a
     cost-based planner.
 

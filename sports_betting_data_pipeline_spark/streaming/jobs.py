@@ -37,7 +37,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from sports_betting_data_pipeline_spark.io import normalize_events_ts, table_path
+from sports_betting_data_pipeline_spark.io import (
+    _events_file_schema,
+    normalize_events_ts,
+    table_path,
+)
 from sports_betting_data_pipeline_spark.schemas import PUSHER_MESSAGE
 from sports_betting_data_pipeline_spark.session import local_frame
 
@@ -175,7 +179,7 @@ def read_events_stream(
         file_schema = _events_file_schema(spark, sf_dir)
         # The file source needs a DIRECTORY. A dir-shaped table
         # (events.parquet/ holding part files — the layout load_table
-        # and table_row_count already support) streams from the table
+        # and size_hint already support) streams from the table
         # path itself: a pathGlobFilter of 'events.parquet' would
         # match LEAF file names and silently drain zero rows. A
         # single-file table keeps the glob over the fixture dir.
@@ -243,30 +247,6 @@ def read_events_stream(
         else:
             out, _ = split_future_events(out, "ts", future_bound)
     return out
-
-
-_EVENTS_SCHEMA_CACHE: dict[str, tuple[tuple[int, int], object]] = {}
-
-
-def _events_file_schema(spark: SparkSession, sf_dir: str):
-    """Footer-read the events schema once per fixture dir. The memo
-    stores the directory fingerprint (max mtime_ns + entry count — the
-    io.load_table stamp, ADVICE r6) alongside the schema: a fixture
-    regenerated mid-process that switches generations (ns-as-long
-    bigint ts ↔ timestamp[us]) re-resolves instead of serving a stale
-    reader schema. Keyed on the ABSOLUTE dir so relative spellings of
-    the same fixture share one entry; superseded fingerprints are
-    overwritten in place, so the cache stays one entry per dir."""
-    from sports_betting_data_pipeline_spark.io import _dir_fingerprint
-
-    path = table_path(os.path.abspath(sf_dir), "events")
-    stamp = _dir_fingerprint(path)
-    hit = _EVENTS_SCHEMA_CACHE.get(path)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    _EVENTS_SCHEMA_CACHE[path] = (stamp, schema)
-    return schema
 
 
 def default_state_partitions(n_keys: int, cores: int) -> int:

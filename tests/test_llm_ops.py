@@ -1677,16 +1677,12 @@ def test_shared_token_base_parity(planted_docs, spark):
 def test_size_hint_bounds_file_scans_only(spark, sf_dir):
     """io.size_hint derives the strategy-switch row bound from the
     DataFrame's own parquet footers (no job, memoized), matching the
-    named-table helper; non-file inputs yield None so a hint can never
-    silently undercount a real source."""
-    from sports_betting_data_pipeline_spark.io import (
-        load_table,
-        size_hint,
-        table_row_count,
-    )
+    table's counted rows; non-file inputs yield None so a hint can
+    never silently undercount a real source."""
+    from sports_betting_data_pipeline_spark.io import load_table, size_hint
 
     docs = load_table(spark, sf_dir, "documents")
-    n = table_row_count(sf_dir, "documents")
+    n = docs.count()
     assert n and size_hint(docs) == n
     # projection/filter don't shrink the scan bound (it's an upper
     # bound, same semantics callers hand-threaded before)
@@ -1694,6 +1690,6 @@ def test_size_hint_bounds_file_scans_only(spark, sf_dir):
     # multi-scan plans bound by the sum of their leaves
     emb = load_table(spark, sf_dir, "embeddings")
     joined = docs.join(emb, F.col("doc_id") == F.col("vec_id"))
-    assert size_hint(joined) == n + table_row_count(sf_dir, "embeddings")
+    assert size_hint(joined) == n + emb.count()
     # in-memory relations have no files: no bound, caller measures
     assert size_hint(spark.range(10).toDF("doc_id")) is None

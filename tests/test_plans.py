@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -825,7 +826,7 @@ def test_widen_partition_probe_memoized(spark, sf_dir):
     changing the decision, and leave streaming inputs on the
     exception -> repartition path."""
     from sports_betting_data_pipeline_spark.io import (
-        _WIDEN_MEMO,
+        _MEMO,
         widen_for_compute,
     )
 
@@ -836,15 +837,16 @@ def test_widen_partition_probe_memoized(spark, sf_dir):
 
     df = build()
     key = (
+        "widen",
         spark.sparkContext.applicationId,
         df.semanticHash(),
         tuple(df.columns),
     )
     a = widen_for_compute(df)
-    assert key in _WIDEN_MEMO  # probe result recorded
-    n_after_first = len(_WIDEN_MEMO)
+    assert key in _MEMO  # probe result recorded
+    n_after_first = len(_MEMO)
     b = widen_for_compute(build())  # identical plan: memo hit
-    assert len(_WIDEN_MEMO) == n_after_first  # no growth re-probing
+    assert len(_MEMO) == n_after_first  # no growth re-probing
     assert a.rdd.getNumPartitions() == b.rdd.getNumPartitions()
     stream = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
@@ -853,36 +855,153 @@ def test_widen_partition_probe_memoized(spark, sf_dir):
     assert widened.isStreaming
 
 
-def test_widen_memo_bounded(spark, sf_dir):
-    """r12 (VERDICT r11 next-#8): _WIDEN_MEMO evicts on overflow —
-    dead-application entries first, then everything — so a long-lived
-    process cycling applications cannot grow it without bound. A miss
-    only re-pays the probe; the widen decision for the live entry is
-    re-derived identically."""
+@pytest.fixture
+def small_memo(monkeypatch):
+    """The engine memo emptied and bounded at 8 entries for one test;
+    the previous entries come back afterwards."""
     import sports_betting_data_pipeline_spark.io as io_mod
+
+    saved = io_mod._MEMO.copy()
+    monkeypatch.setattr(io_mod, "_MEMO_MAX", 8)
+    io_mod._MEMO.clear()
+    yield io_mod
+    io_mod._MEMO.clear()
+    io_mod._MEMO.update(saved)
+
+
+def test_widen_memo_bounded(spark, sf_dir, small_memo):
+    """The engine memo is LRU-bounded: inserting into a full memo
+    evicts only the least recently used entry, a hit refreshes its
+    entry, a changed stamp overwrites in place, and compute runs
+    outside the lock. A miss only re-pays the probe; the widen
+    decision is re-derived identically."""
+    io_mod = small_memo
     from sports_betting_data_pipeline_spark.io import widen_for_compute
 
-    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    saved = dict(io_mod._WIDEN_MEMO)
-    saved_max = io_mod._WIDEN_MEMO_MAX
+    def never():
+        raise AssertionError("a memo hit must not recompute")
+
+    df = load_table(spark, sf_dir, "documents").select("doc_id")
+    io_mod._MEMO.clear()
+    for i in range(8):
+        io_mod._memo(("t", i), None, lambda i=i: i)
+    assert io_mod._memo(("t", 0), None, never) == 0  # hit refreshes t0
+    widen_for_compute(df)  # a real insert into the full memo
+    assert len(io_mod._MEMO) == 8
+    assert ("t", 1) not in io_mod._MEMO  # the LRU entry, and only it
+    assert all(("t", i) in io_mod._MEMO for i in (0, *range(2, 8)))
+    assert next(reversed(io_mod._MEMO))[0] == "widen"
+    # a new stamp recomputes and overwrites without growing the memo
+    assert io_mod._memo(("t", 0), "v2", lambda: "fresh") == "fresh"
+    assert io_mod._memo(("t", 0), "v2", never) == "fresh"
+    assert len(io_mod._MEMO) == 8
+    assert io_mod._memo(("lock",), None, io_mod._MEMO_LOCK.locked) is False
+
+
+def test_memo_bounded_under_concurrent_inserts(small_memo):
+    """8 threads inserting (and re-stamping) into a small memo, with a
+    short switch interval, raise nothing and never see it above its
+    bound: eviction and insert are one step under the lock."""
+    import sys
+    import threading
+
+    io_mod = small_memo
+    sizes: list[int] = []
+    errors: list[Exception] = []
+
+    class Key(tuple):
+        # hashed and compared in Python, so the interpreter may switch
+        # threads inside every memo lookup and insert
+        def __hash__(self):
+            return tuple.__hash__(self)
+
+        def __eq__(self, other):
+            return tuple.__eq__(self, other)
+
+    def worker(t: int) -> None:
+        try:
+            for i in range(2000):
+                # half the calls insert a new key (evicting), half
+                # re-stamp a key the other threads share
+                key = Key(("thread", t, i) if i % 2 else ("shared", i % 16))
+                value = io_mod._memo(key, Key((i // 16,)), lambda: (t, i))
+                assert isinstance(value, tuple)
+                sizes.append(len(io_mod._MEMO))
+        except Exception as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
     try:
-        io_mod._WIDEN_MEMO_MAX = 8
-        # fill with dead-app keys beyond the cap
-        io_mod._WIDEN_MEMO.clear()
-        for i in range(8):
-            io_mod._WIDEN_MEMO[(f"dead-app-{i}", i, ("c",))] = 1
-        widen_for_compute(df)  # insert triggers dead-app eviction
-        apps = {k[0] for k in io_mod._WIDEN_MEMO}
-        assert apps == {spark.sparkContext.applicationId}
-        assert len(io_mod._WIDEN_MEMO) == 1
-        # same-app overflow: full clear, then the fresh entry lands
-        io_mod._WIDEN_MEMO.clear()
-        app = spark.sparkContext.applicationId
-        for i in range(8):
-            io_mod._WIDEN_MEMO[(app, i, ("c",))] = 1
-        widen_for_compute(df.select("doc_id"))
-        assert len(io_mod._WIDEN_MEMO) == 1
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
     finally:
-        io_mod._WIDEN_MEMO_MAX = saved_max
-        io_mod._WIDEN_MEMO.clear()
-        io_mod._WIDEN_MEMO.update(saved)
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors
+    assert len(sizes) == 8 * 2000
+    assert max(sizes) <= 8 and len(io_mod._MEMO) == 8
+
+
+def test_memo_invalidates_on_fixture_rewrite(spark, sf_dir, tmp_path):
+    """A fixture dir rewritten inside one Spark application is served
+    fresh: load_table returns the new rows, size_hint the new bound,
+    and the file-stream events source reads the other ``ts``
+    generation (timestamp[us] -> ns-as-long bigint) to the same
+    instants."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sports_betting_data_pipeline_spark.io import size_hint
+    from sports_betting_data_pipeline_spark.streaming.jobs import (
+        read_events_stream,
+        run_stream_to_table,
+    )
+
+    d = str(tmp_path / "fixture")
+    shutil.copytree(sf_dir, d, copy_function=shutil.copyfile)
+
+    def batch_events() -> list:
+        return sorted(
+            load_table(spark, d, "events").select("event_id", "ts").collect()
+        )
+
+    def drain(tag: str) -> list:
+        out = run_stream_to_table(
+            read_events_stream(spark, d).select("event_id", "ts"),
+            f"memo_rewrite_{tag}_{tmp_path.name}",
+            output_mode="append",
+            state_partitions=None,
+        )
+        return sorted(out.collect())
+
+    docs = load_table(spark, d, "documents")
+    assert load_table(spark, d, "documents") is docs  # memo hit
+    n = docs.count()
+    assert n > 1 and size_hint(docs) == n
+    events_before = batch_events()
+    assert drain("us") == events_before
+
+    path = os.path.join(d, "documents.parquet")
+    pq.write_table(pq.read_table(path).slice(0, n // 2), path)
+    stale, docs = docs, load_table(spark, d, "documents")
+    assert docs is not stale  # re-resolved, not the memoized scan
+    assert docs.count() == n // 2
+    assert size_hint(docs) == n // 2
+
+    path = os.path.join(d, "events.parquet")
+    events = pq.read_table(path)
+    assert events.schema.field("ts").type == pa.timestamp("us")
+    i = events.schema.get_field_index("ts")
+    pq.write_table(
+        events.set_column(i, "ts", events["ts"].cast(pa.timestamp("ns"))),
+        path,
+    )
+    assert dict(spark.read.parquet(path).dtypes)["ts"] == "bigint"
+    assert drain("ns") == events_before
+    assert batch_events() == events_before
