@@ -7,7 +7,12 @@ entry(), then every queries() entry vs its oracle_sql() on DuckDB at
 sf0.01 (or $VERIFY_SF_DIR), comparing row count, column set, and
 order-insensitive values (floats via isclose, timestamps normalized).
 
-Exit 0 = all match; nonzero = any mismatch. Prints one line per query.
+Query-name filters on argv select every query whose name contains one
+of them; a filter that matches no query fails the run before Spark
+starts.
+
+Exit 0 = all match; nonzero = any mismatch or unmatched filter. Prints
+one line per query.
 """
 
 from __future__ import annotations
@@ -91,6 +96,14 @@ def main() -> int:
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
+    only = sys.argv[1:]  # optional query-name filters (substrings)
+    qs, osql = mod.queries(), mod.oracle_sql()
+    unmatched = [s for s in only if not any(s in name for name in qs)]
+    if unmatched:
+        print(f"unknown query filters (match no query): {unmatched}")
+        print("RESULT: FAIL")
+        return 2
+
     from pyspark.sql import SparkSession
 
     spark = (
@@ -113,8 +126,6 @@ def main() -> int:
         src = f"{tbl}/*.parquet" if os.path.isdir(tbl) else tbl
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
 
-    only = sys.argv[1:]  # optional query-name filters
-    qs, osql = mod.queries(), mod.oracle_sql()
     report: dict[str, dict] = {}
     for name in sorted(qs):
         if only and not any(s in name for s in only):

@@ -14,7 +14,16 @@ Catalyst rules; Pandas UDFs only where no built-in exists (similarity
 search, multimodal decode). Side effects only in sinks.
 """
 
-from sports_betting_data_pipeline_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Lazy (PEP 562): importing the package must not import pyspark,
+    # because Spark starts worker_daemon as ``python -m`` with its own
+    # pyspark archives still first on sys.path.
+    if name == "get_spark":
+        from sports_betting_data_pipeline_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

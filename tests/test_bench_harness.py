@@ -194,3 +194,17 @@ def test_bench_rejects_unknown_query_filter(tmp_path):
     )
     assert proc.returncode != 0
     assert "unknown bench queries" in proc.stderr
+
+
+def test_verify_driver_rejects_unmatched_query_filter():
+    """A misspelt filter must fail the run, not shrink it silently:
+    l22_neardup_clusters_lsh is not a catalog name (the query is
+    l22_lsh_dedup_clusters) and used to leave only l12 checked."""
+    proc = subprocess.run(
+        [sys.executable, os.path.join(_REPO, "scripts", "verify_driver.py"),
+         "l22_neardup_clusters_lsh", "l12_embedding_neardup"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode != 0
+    assert "['l22_neardup_clusters_lsh']" in proc.stdout
+    assert proc.stdout.strip().endswith("RESULT: FAIL")

@@ -92,7 +92,7 @@ def test_wheel_builds_and_installs(tmp_path):
     # provenance with the venv python ALONE — no PYTHONPATH, which
     # would precede site-packages and could shadow the venv copy with
     # a parent-env install (ADVICE r10 #1); find_spec locates without
-    # executing __init__ (which needs pyspark, absent in the venv)
+    # executing the package (its modules need pyspark, absent in the venv)
     loc = subprocess.run(
         [vpy, "-c",
          "import importlib.util; "
