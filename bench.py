@@ -42,6 +42,47 @@ def _consume(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def start_session(app_name: str):
+    """local[$SPARK_GRAFT_CPUS] (default 32), as many shuffle partitions."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return get_spark(
+        app_name=app_name,
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus) if cpus.isdigit() else 32,
+    )
+
+
+def warm_up(spark, sf_dir: str, subsystems: bool) -> None:
+    """Warm up the JVM/codegen before timing. One batch query is not
+    enough: r3's driver bench charged ~5 s of first-use cost to
+    whichever query first touched a cold subsystem (st05 5.61 s driver
+    vs ~1.1 s warm — from_json/base64 codegen; VERDICT r3 next-#4).
+    ``subsystems`` exercises each expensive one on tiny inputs:
+      - flagship batch query (scans, hash aggregate, codegen)
+      - JSON/base64 expression stack (st05's shape)
+      - Arrow/Python worker fork (Pandas UDF paths)
+      - streaming engine + state store (availableNow drain)
+    A filtered bench run (CI smoke) skips them — it is a parse-path
+    check, not a timing measurement.
+    """
+    warm_sf = "/root/testdata/sf0.001"
+    warmup_dir = warm_sf if os.path.isdir(warm_sf) else sf_dir
+    spark.range(1).count()
+    if not subsystems:
+        return
+    _consume(QUERIES["q01_pricing_summary"](spark, sf_dir))
+    for warm_name in (
+        "st05_pusher_decode",   # to_json/base64/from_json codegen
+        "m01_multimodal_features",  # Arrow + Python worker startup
+        "st01_tumbling_window",  # streaming engine + state store
+    ):
+        if warm_name in QUERIES:
+            try:
+                _consume(QUERIES[warm_name](spark, warmup_dir))
+            except Exception:
+                pass  # warmup must never fail the bench
+
+
 # The two documented O(N²) certification audit twins (SCALE.md's sf1
 # adjudication table): each certifies a bucketed production path (l42 →
 # l43's IVF ANN, l21 → l22's banded LSH CC) and carries a small-cohort
@@ -131,7 +172,6 @@ def resolve_out_path(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     match = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(match.group(1)) if match else None
 
@@ -144,38 +184,8 @@ def main() -> None:
             raise SystemExit(f"unknown bench queries: {sorted(unknown)}")
         selected = [n for n in selected if n in want]
 
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if cpus.isdigit() else 32,
-    )
-
-    # Warm up the JVM/codegen before timing. One batch query is not
-    # enough: r3's driver bench charged ~5 s of first-use cost to
-    # whichever query first touched a cold subsystem (st05 5.61 s
-    # driver vs ~1.1 s warm — from_json/base64 codegen; VERDICT r3
-    # next-#4). Exercise each expensive subsystem on tiny inputs:
-    #   - flagship batch query (scans, hash aggregate, codegen)
-    #   - JSON/base64 expression stack (st05's shape)
-    #   - Arrow/Python worker fork (Pandas UDF paths)
-    #   - streaming engine + state store (availableNow drain)
-    # A filtered run (CI smoke) skips the subsystem warmups — it is a
-    # parse-path check, not a timing measurement.
-    warm_sf = "/root/testdata/sf0.001"
-    warmup_dir = warm_sf if os.path.isdir(warm_sf) else sf_dir
-    spark.range(1).count()
-    if not query_filter:
-        _consume(QUERIES["q01_pricing_summary"](spark, sf_dir))
-        for warm_name in (
-            "st05_pusher_decode",   # to_json/base64/from_json codegen
-            "m01_multimodal_features",  # Arrow + Python worker startup
-            "st01_tumbling_window",  # streaming engine + state store
-        ):
-            if warm_name in QUERIES:
-                try:
-                    _consume(QUERIES[warm_name](spark, warmup_dir))
-                except Exception:
-                    pass  # warmup must never fail the bench
+    spark = start_session("bench")
+    warm_up(spark, sf_dir, subsystems=not query_filter)
 
     # Best-of-N per query (default 2): single-shot numbers on a shared
     # box fold GC pauses and first-use warmup (state stores, Python

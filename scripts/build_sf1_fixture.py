@@ -2,16 +2,13 @@
 """Build a FULL sf1-scale fixture dir (every catalog table, 10× sf0.1)
 for the whole-catalog engine bench (VERDICT r8 next-#3).
 
-The family-level posture script (scale_posture_sf1.py) scales only the
-tables its four families read; the full-catalog bench needs all ten.
 Each fact table is the sf0.1 table replicated 10× with DISJOINT key
 ranges and CONSISTENT foreign-key offsets — replica r's orders
 reference replica r's customers, so every join keeps its true fan-out
 and no query gets artificially fast on empty join results. nation and
 region stay fixed (scale-invariant dims, as in TPC-H).
 
-Replica-specific adversarial shape (same choices the posture script
-measured, documented there):
+Replica-specific adversarial shape:
 - documents: a per-replica tag token appended to text — replicas stay
   NEAR-duplicates (Jaccard ≈ 0.99) without collapsing as exact dups,
   the dense-bucket hard case for the LSH/near-dup family.
@@ -22,7 +19,9 @@ measured, documented there):
   see 10× per-window density.
 
 Output: /tmp/spark_graft_sf1_catalog (the fixture tree is read-only).
-Idempotent per table; `--force` rebuilds.
+Idempotent per table; `--force` rebuilds. To compare plan shapes and
+timings across the two scales, pass both dirs to `scripts/measure.py`
+as `--sf-dir`.
 """
 
 from __future__ import annotations

@@ -54,25 +54,13 @@ def _ensure_engine_confs(spark: SparkSession) -> None:
     The driver (and any embedding application) hands us ITS
     SparkSession; results must not depend on that session's ambient
     timezone, so pin UTC here (SURVEY.md §7 step 3 gotcha) along with
-    the ns-as-long parquet read the events table needs. All of these
-    are runtime-settable SQL confs.
+    the ns-as-long parquet read the events table needs. Both are
+    runtime SQL confs. A static conf cannot be set on a running session
+    (every attempt raises CANNOT_MODIFY_STATIC_CONFIG), so static ones
+    belong in ``session.get_spark``'s builder.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Drop PySpark's per-API-call debugging wrapper (error-context
-    # call-site capture: ~3 py4j round trips per DataFrame/Column call;
-    # see session.py for the measured construction win). It is a
-    # STATIC conf: sessions built by get_spark() set it at builder
-    # time; on a caller-provided (driver) session the set below raises
-    # CANNOT_MODIFY_STATIC_CONFIG and the wrapper simply stays on —
-    # correctness is unaffected either way (error-context metadata
-    # only), so swallow the failure.
-    try:
-        spark.conf.set(
-            "spark.python.sql.dataFrameDebugging.enabled", "false"
-        )
-    except Exception:
-        pass
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
