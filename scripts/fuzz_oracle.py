@@ -11,7 +11,8 @@ nondeterminism), non-finite doubles, unicode/empty text, heavy skew.
 This script generates SEEDED adversarial variants of all ten fixture
 tables, writes each variant to its own parquet dir (unique basename —
 plans/q_sources._scratch keys its roundtrip scratch on the basename),
-and replays every catalog query on Spark vs its oracle on DuckDB.
+and replays every catalog query on Spark vs its oracle on DuckDB,
+compared through tests/oracle.py.
 Both engines read identical bytes, so any divergence is a real
 engine-vs-SQL-semantics finding, not fixture luck.
 
@@ -27,7 +28,6 @@ error. Per-query line format mirrors verify_driver.py.
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import json
 import os
 import shutil
@@ -35,7 +35,6 @@ import sys
 import time
 import traceback
 
-import duckdb
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -44,16 +43,10 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
-_SCRIPTS = os.path.dirname(os.path.abspath(__file__))
-if _SCRIPTS not in sys.path:
-    sys.path.insert(0, _SCRIPTS)
 
-from verify_driver import frames_match, norm  # noqa: E402
+from sports_betting_data_pipeline_spark.io import TABLES, table_path  # noqa: E402
+from tests.oracle import connect, frame_mismatch, load_entry  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 FACTS = ["orders", "lineitem", "events", "documents", "embeddings"]
 PK = {
     "region": "r_regionkey", "nation": "n_nationkey",
@@ -696,7 +689,7 @@ KNOWN_CONTRACT_SKIPS = {
 def load_base(base_dir: str) -> dict[str, tuple[pd.DataFrame, pa.Schema]]:
     out = {}
     for t in TABLES:
-        tbl = pq.read_table(os.path.join(base_dir, f"{t}.parquet"))
+        tbl = pq.read_table(table_path(base_dir, t))
         out[t] = (tbl.to_pandas(), tbl.schema)
     return out
 
@@ -713,17 +706,12 @@ def write_variant(base, variant_fn, seed: int, out_dir: str) -> None:
         tbl = pa.Table.from_pandas(
             df, schema=schema.remove_metadata(), preserve_index=False
         )
-        pq.write_table(tbl, os.path.join(out_dir, f"{t}.parquet"))
+        pq.write_table(tbl, table_path(out_dir, t))
 
 
 def run_variant(spark, mod, variant: str, sf_dir: str, only: list[str]) -> dict:
     qs, osql = mod.queries(), mod.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(sf_dir, t + '.parquet')}')"
-        )
+    con = connect(sf_dir)
     results = {}
     for name in sorted(qs):
         if only and not any(s in name for s in only):
@@ -738,14 +726,14 @@ def run_variant(spark, mod, variant: str, sf_dir: str, only: list[str]) -> dict:
         s_err = o_err = None
         sdf = odf = None
         try:
-            sdf = norm(qs[name](spark, sf_dir).toPandas())
+            sdf = qs[name](spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
             s_err = f"{type(exc).__name__}: {exc}"
         finally:
             spark.catalog.clearCache()
         if name in osql:
             try:
-                odf = norm(con.execute(osql[name]).fetch_df())
+                odf = con.execute(osql[name]).fetch_df()
             except Exception as exc:  # noqa: BLE001
                 o_err = f"{type(exc).__name__}: {exc}"
         else:
@@ -762,8 +750,8 @@ def run_variant(spark, mod, variant: str, sf_dir: str, only: list[str]) -> dict:
         elif o_err:
             status, detail = "oracle_error", o_err
         else:
-            ok, why = frames_match(sdf, odf)
-            status, detail = ("match", "") if ok else ("mismatch", why)
+            why = frame_mismatch(sdf, odf)
+            status, detail = ("match", "") if why is None else ("mismatch", why)
         results[name] = {"status": status, "detail": detail[:500],
                          "rows": None if sdf is None else len(sdf),
                          "sec": round(time.time() - t0, 2)}
@@ -791,11 +779,7 @@ def main() -> int:
         print(f"unknown variants: {sorted(unknown)}", file=sys.stderr)
         return 2
 
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
 
     from pyspark.sql import SparkSession
 

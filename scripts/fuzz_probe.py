@@ -4,27 +4,18 @@ variant dir: python scripts/fuzz_probe.py <variant_dir> <query> [n]"""
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import sys
 
-import duckdb
-import pandas as pd
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from verify_driver import TABLES, norm  # noqa: E402
+from tests.oracle import frame_mismatch, load_entry, normalize, run_oracle  # noqa: E402
 
 
 def main():
     sf_dir, name = sys.argv[1], sys.argv[2]
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 12
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = load_entry()
     from pyspark.sql import SparkSession
 
     spark = (
@@ -34,13 +25,10 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sdf = norm(mod.queries()[name](spark, sf_dir).toPandas())
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    odf = norm(con.execute(mod.oracle_sql()[name]).fetch_df())
+    sdf = mod.queries()[name](spark, sf_dir).toPandas()
+    odf = run_oracle(mod.oracle_sql()[name], sf_dir)
+    print(frame_mismatch(sdf, odf) or "MATCH")
+    sdf, odf = normalize(sdf), normalize(odf)
     cols = sorted(set(sdf.columns) & set(odf.columns))
     a = sdf[cols].sort_values(cols, na_position="last").reset_index(drop=True)
     b = odf[cols].sort_values(cols, na_position="last").reset_index(drop=True)

@@ -4,70 +4,27 @@
 Loads __spark_entry__.py the way the external driver does (importlib,
 BARE SparkSession with none of the engine's configs), runs the smoke
 entry(), then every queries() entry vs its oracle_sql() on DuckDB at
-sf0.01 (or $VERIFY_SF_DIR), comparing row count, column set, and
-order-insensitive values (floats via isclose, timestamps normalized).
+sf0.01 (or $VERIFY_SF_DIR) through tests/oracle.py's comparator: row
+count, column set, numeric kind (int vs float) and order-insensitive
+values (floats via isclose, timestamps normalized). A query with no
+oracle fails when it returns no rows.
 
 Query-name filters on argv select every query whose name contains one
 of them; a filter that matches no query fails the run before Spark
 starts.
 
-Exit 0 = all match; nonzero = any mismatch or unmatched filter. Prints
-one line per query.
+Exit 0 = all match; nonzero = any mismatch, empty rows-only result or
+unmatched filter. Prints one line per query.
 """
 
 from __future__ import annotations
 
-import datetime
-import importlib.util
 import os
 import sys
 import time
 
-import duckdb
-import numpy as np
-import pandas as pd
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = os.environ.get("VERIFY_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def norm(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = pdf.copy()
-    for c in out.columns:
-        s = out[c]
-        if isinstance(s.dtype, pd.DatetimeTZDtype):
-            out[c] = s.dt.tz_convert("UTC").dt.tz_localize(None)
-        elif s.dtype == object:
-            nn = s.dropna()
-            if len(nn) and isinstance(nn.iloc[0], (datetime.date, datetime.datetime)):
-                out[c] = pd.to_datetime(s)
-        if pd.api.types.is_datetime64_any_dtype(out[c].dtype):
-            out[c] = out[c].astype("datetime64[us]")
-    return out
-
-
-def frames_match(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]:
-    if sorted(sdf.columns) != sorted(odf.columns):
-        return False, f"columns spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}"
-    if len(sdf) != len(odf):
-        return False, f"rows spark={len(sdf)} oracle={len(odf)}"
-    cols = sorted(sdf.columns)
-    a = sdf[cols].sort_values(cols, na_position="last").reset_index(drop=True)
-    b = odf[cols].sort_values(cols, na_position="last").reset_index(drop=True)
-    for c in cols:
-        if pd.api.types.is_float_dtype(a[c]) or pd.api.types.is_float_dtype(b[c]):
-            av = a[c].astype(float).to_numpy()
-            bv = b[c].astype(float).to_numpy()
-            ok = np.all((np.isnan(av) & np.isnan(bv)) | np.isclose(av, bv, rtol=1e-9, atol=1e-9))
-        else:
-            ok = bool(((a[c].isna() & b[c].isna()) | (a[c].astype(object) == b[c].astype(object))).all())
-        if not ok:
-            return False, f"values differ in column {c}"
-    return True, ""
 
 
 def main() -> int:
@@ -90,11 +47,12 @@ def main() -> int:
             return 2
         print(f"ENGINE: {_eng.__file__}")
 
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    # the shared oracle module imports the engine's io: only now, after
+    # the provenance import above, may it be imported
+    sys.path.insert(0, REPO)
+    from tests.oracle import connect, frame_mismatch, load_entry
+
+    mod = load_entry()
 
     only = sys.argv[1:]  # optional query-name filters (substrings)
     qs, osql = mod.queries(), mod.oracle_sql()
@@ -118,13 +76,7 @@ def main() -> int:
     print(f"SMOKE entry(): rows={n_smoke} cols={len(smoke.columns)}")
     failed = n_smoke <= 0
 
-    con = duckdb.connect()
-    for t in TABLES:
-        # dir-shaped tables (part files under <t>.parquet/ — the sf1
-        # fixture layout) need a glob; single-file tables read as-is
-        tbl = f"{SF}/{t}.parquet"
-        src = f"{tbl}/*.parquet" if os.path.isdir(tbl) else tbl
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
+    con = connect(SF)
 
     report: dict[str, dict] = {}
     for name in sorted(qs):
@@ -132,7 +84,7 @@ def main() -> int:
             continue
         t0 = time.perf_counter()
         try:
-            sdf = norm(qs[name](spark, SF).toPandas())
+            sdf = qs[name](spark, SF).toPandas()
         except Exception as exc:  # noqa: BLE001
             print(f"{name}: ERROR {type(exc).__name__}: {exc}")
             report[name] = {"status": "spark_error", "err": f"{type(exc).__name__}: {exc}"}
@@ -145,13 +97,18 @@ def main() -> int:
             spark.catalog.clearCache()
         sec = round(time.perf_counter() - t0, 2)
         if name not in osql:
-            print(f"{name}: rows-only ({len(sdf)} rows)")
-            report[name] = {"status": "rows_only", "rows": len(sdf), "sec": sec}
-            if len(sdf) == 0:
-                print(f"{name}: WARNING zero rows")
+            # a rows-only query has nothing to match, so it must at
+            # least return rows (the rule perfbench/checks.py applies)
+            ok = len(sdf) > 0
+            print(f"{name}: rows-only ({len(sdf)} rows)"
+                  + ("" if ok else " FAIL: empty result"))
+            report[name] = {"status": "rows_only" if ok else "rows_only_empty",
+                            "rows": len(sdf), "sec": sec}
+            failed = failed or not ok
             continue
-        odf = norm(con.execute(osql[name]).fetch_df())
-        ok, why = frames_match(sdf, odf)
+        odf = con.execute(osql[name]).fetch_df()
+        why = frame_mismatch(sdf, odf)
+        ok = why is None
         tag = "MATCH" if ok else f"MISMATCH {why}"
         if len(sdf) == 0 and ok:
             tag += " (WARNING zero rows)"
@@ -161,7 +118,7 @@ def main() -> int:
             "rows": len(sdf),
             "oracle_rows": len(odf),
             "sec": sec,
-            "detail": why,
+            "detail": why or "",
         }
         failed = failed or not ok
     print("RESULT:", "FAIL" if failed else "PASS")

@@ -20,8 +20,8 @@ BYTES:
      footer-count) — the exact size-hinted plan l22 runs at sf1.
   3. DuckDB: recursive min-label CTE over the same parquet, the same
      fixpoint the committed l22 oracle uses.
-  4. frames_match (verify_driver's comparator) on
-     (doc_id, component, comp_size).
+  4. tests/oracle.py's frame_mismatch, the comparator every oracle
+     check shares, on (node, component, comp_size).
 
 The pair stage itself stays covered by the committed sf0.01/sf0.1
 hash checks and the LSH-subset recall argument in l22's docstring
@@ -45,13 +45,8 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
-_SCRIPTS = os.path.dirname(os.path.abspath(__file__))
-if _SCRIPTS not in sys.path:
-    sys.path.insert(0, _SCRIPTS)
 
-import duckdb  # noqa: E402
-
-from verify_driver import frames_match, norm  # noqa: E402
+from tests.oracle import connect, frame_mismatch  # noqa: E402
 
 def duckdb_components(con, edges_glob: str):
     """Min-label connected components in DuckDB via an ITERATIVE
@@ -164,15 +159,16 @@ def main() -> int:
                 spark.read.parquet(edges_dir),
                 size_hint=32 * hint if hint else None,
             )
-            sdf = norm(cc.select("node", "component").withColumn(
+            sdf = cc.select("node", "component").withColumn(
                 "comp_size",
                 F.count(F.lit(1)).over(Window.partitionBy("component")),
-            ).toPandas())
+            ).toPandas()
             spark.catalog.clearCache()
 
-            con = duckdb.connect()
-            odf = norm(duckdb_components(con, f"{edges_dir}/*.parquet"))
-            ok, why = frames_match(sdf, odf)
+            con = connect(args.sf_dir)
+            odf = duckdb_components(con, f"{edges_dir}/*.parquet")
+            why = frame_mismatch(sdf, odf)
+            ok = why is None
             sec = round(time.perf_counter() - t0, 2)
             status = "match" if ok else f"MISMATCH {why}"
             print(f"{name}: {status} ({len(sdf)} nodes, {n_edges} edges, "
@@ -184,7 +180,7 @@ def main() -> int:
                 "n_edges": int(n_edges),
                 "size_hint": int(32 * hint) if hint else None,
                 "sec": sec,
-                "detail": why,
+                "detail": why or "",
             }
             failed = failed or not ok
 
@@ -193,19 +189,16 @@ def main() -> int:
             # WindowGroupLimit argmax) at sf1; DuckDB derives the
             # survivor per component from ITS OWN components (lbl is
             # still the temp table from duckdb_components) joined to
-            # the documents metadata.
+            # the documents fixture view.
             if name == "l21_cc_stage" and ok:
                 t0 = time.perf_counter()
                 from sports_betting_data_pipeline_spark.plans import QUERIES
 
-                s55 = norm(
-                    QUERIES["l55_dedup_survivorship"](spark, args.sf_dir)
-                    .toPandas()
-                )
+                s55 = QUERIES["l55_dedup_survivorship"](
+                    spark, args.sf_dir
+                ).toPandas()
                 spark.catalog.clearCache()
-                dsrc = f"{args.sf_dir}/documents.parquet"
-                dglob = f"{dsrc}/*.parquet" if os.path.isdir(dsrc) else dsrc
-                o55 = norm(con.execute(f"""
+                o55 = con.execute("""
                     SELECT component,
                            node AS survivor_doc_id,
                            n_chars AS survivor_chars,
@@ -217,10 +210,11 @@ def main() -> int:
                                    ORDER BY d.n_chars DESC, l.node) AS rn,
                                count(*) OVER (PARTITION BY l.component) AS cnt
                         FROM lbl l
-                        JOIN read_parquet('{dglob}') d ON d.doc_id = l.node
+                        JOIN documents d ON d.doc_id = l.node
                     ) WHERE rn = 1
-                """).fetch_df())
-                ok55, why55 = frames_match(s55, o55)
+                """).fetch_df()
+                why55 = frame_mismatch(s55, o55)
+                ok55 = why55 is None
                 sec55 = round(time.perf_counter() - t0, 2)
                 st55 = "match" if ok55 else f"MISMATCH {why55}"
                 print(f"l55_policy_stage: {st55} ({len(s55)} survivors, "
@@ -230,7 +224,7 @@ def main() -> int:
                     "rows": int(len(s55)),
                     "oracle_rows": int(len(o55)),
                     "sec": sec55,
-                    "detail": why55,
+                    "detail": why55 or "",
                 }
                 failed = failed or not ok55
 

@@ -16,6 +16,7 @@ import importlib.util
 import json
 import os
 import re
+import shutil
 import subprocess
 import sys
 
@@ -208,3 +209,23 @@ def test_verify_driver_rejects_unmatched_query_filter():
     assert proc.returncode != 0
     assert "['l22_neardup_clusters_lsh']" in proc.stdout
     assert proc.stdout.strip().endswith("RESULT: FAIL")
+
+
+def test_verify_driver_engine_path_checks_the_given_copy(tmp_path, sf_dir):
+    """VERIFY_ENGINE_PATH resolves the engine from another location (an
+    installed wheel's site-packages): the run must report and check
+    that copy, not the source tree."""
+    pkg = "sports_betting_data_pipeline_spark"
+    shutil.copytree(
+        os.path.join(_REPO, pkg), tmp_path / pkg,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    env = dict(os.environ, VERIFY_ENGINE_PATH=str(tmp_path), VERIFY_SF_DIR=sf_dir)
+    proc = subprocess.run(
+        [sys.executable, os.path.join(_REPO, "scripts", "verify_driver.py"),
+         "q01_pricing_summary"],
+        capture_output=True, text=True, timeout=600, env=env, cwd=tmp_path,
+    )
+    assert f"ENGINE: {tmp_path / pkg / '__init__.py'}" in proc.stdout, proc.stdout
+    assert "q01_pricing_summary: MATCH" in proc.stdout, proc.stdout
+    assert proc.stdout.strip().endswith("RESULT: PASS"), proc.stdout

@@ -9,7 +9,6 @@ can rot silently.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import sys
 
@@ -22,7 +21,32 @@ if SCRIPTS not in sys.path:
 
 import fuzz_oracle  # noqa: E402
 
+from sports_betting_data_pipeline_spark.io import TABLES  # noqa: E402
 from sports_betting_data_pipeline_spark.plans import ORACLES, QUERIES  # noqa: E402
+from tests.oracle import load_entry  # noqa: E402
+
+
+@pytest.fixture(scope="module")
+def sweep(spark, sf_dir, tmp_path_factory):
+    """Runs ``names`` through the harness's compare loop on the seeded
+    ``variant`` of the test fixture; returns the loop's results."""
+    entry, base = load_entry(), fuzz_oracle.load_base(sf_dir)
+
+    def run(variant: str, names) -> dict:
+        vdir = str(tmp_path_factory.mktemp(variant) / f"fz_mini_{variant}")
+        fuzz_oracle.write_variant(base, fuzz_oracle.VARIANTS[variant], 20260816, vdir)
+        return fuzz_oracle.run_variant(spark, entry, variant, vdir, list(names))
+
+    return run
+
+
+def _assert_mini_sweep(sweep, variant: str, names) -> None:
+    for name in names:
+        assert name in QUERIES and name in ORACLES, name
+    res = sweep(variant, names)
+    bad = {k: v for k, v in res.items() if v["status"] != "match"}
+    assert len(res) == len(names)
+    assert not bad, bad
 
 
 def test_contract_skips_reference_real_queries_and_variants():
@@ -48,7 +72,7 @@ def test_variant_generators_are_seed_deterministic(tmp_path):
         d2 = tmp_path / f"{v}_b"
         fuzz_oracle.write_variant(base, fuzz_oracle.VARIANTS[v], 7, str(d1))
         fuzz_oracle.write_variant(base, fuzz_oracle.VARIANTS[v], 7, str(d2))
-        for t in fuzz_oracle.TABLES:
+        for t in TABLES:
             b1 = (d1 / f"{t}.parquet").read_bytes()
             b2 = (d2 / f"{t}.parquet").read_bytes()
             assert b1 == b2, (v, t)
@@ -63,44 +87,23 @@ def test_variant_generators_are_seed_deterministic(tmp_path):
 
 
 @pytest.mark.parametrize("name", ["q01_pricing_summary", "l05_prefix_dedup"])
-def test_fuzz_nulls_variant_end_to_end(spark, tmp_path, name):
+def test_fuzz_nulls_variant_end_to_end(sweep, name):
     """One end-to-end differential check per representative query on
     the nulls variant — the harness's compare loop itself (variant
     write, DuckDB view registration, Spark-vs-oracle match) must stay
     green. l05 is the query whose NULL-text divergence this harness
     originally caught."""
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    base = fuzz_oracle.load_base("/root/testdata/sf0.001")
-    vdir = str(tmp_path / "fz_smoke_nulls")
-    fuzz_oracle.write_variant(base, fuzz_oracle.v_nulls, 20260816, vdir)
-    res = fuzz_oracle.run_variant(spark, mod, "nulls", vdir, [name])
+    res = sweep("nulls", [name])
     assert res[name]["status"] == "match", res[name]
 
 
-def test_fuzz_nulls_mini_sweep(spark, tmp_path):
+def test_fuzz_nulls_mini_sweep(sweep):
     """Seeded nulls-variant mini-sweep over the queries the first fuzz
     wave flagged (one per engine fix it motivated — the list lives
     next to the harness, fuzz_oracle.NULLS_SMOKE): a regression in any
     fuzz fix fails CI in about a minute instead of surfacing at the
     next session-scale 9-variant sweep."""
-    for name in fuzz_oracle.NULLS_SMOKE:
-        assert name in QUERIES and name in ORACLES, name
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    base = fuzz_oracle.load_base("/root/testdata/sf0.001")
-    vdir = str(tmp_path / "fz_mini_nulls")
-    fuzz_oracle.write_variant(base, fuzz_oracle.v_nulls, 20260816, vdir)
-    res = fuzz_oracle.run_variant(spark, mod, "nulls", vdir, list(fuzz_oracle.NULLS_SMOKE))
-    bad = {k: v for k, v in res.items() if v["status"] != "match"}
-    assert len(res) == len(fuzz_oracle.NULLS_SMOKE)
-    assert not bad, bad
+    _assert_mini_sweep(sweep, "nulls", fuzz_oracle.NULLS_SMOKE)
 
 
 def test_contract_skip_list_size_is_pinned():
@@ -113,54 +116,24 @@ def test_contract_skip_list_size_is_pinned():
     )
 
 
-def test_fuzz_timewarp_mini_sweep(spark, tmp_path):
+def test_fuzz_timewarp_mini_sweep(sweep):
     """Seeded timewarp mini-sweep (extreme pre-1970 / far-future
     timestamps): pins the negative-epoch floor-divide fixes and the
     extreme-instant parse/render paths the r8 ninth variant caught —
     same CI rationale as the nulls mini-sweep."""
-    for name in fuzz_oracle.TIMEWARP_SMOKE:
-        assert name in QUERIES and name in ORACLES, name
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    base = fuzz_oracle.load_base("/root/testdata/sf0.001")
-    vdir = str(tmp_path / "fz_mini_timewarp")
-    fuzz_oracle.write_variant(base, fuzz_oracle.v_timewarp, 20260816, vdir)
-    res = fuzz_oracle.run_variant(
-        spark, mod, "timewarp", vdir, list(fuzz_oracle.TIMEWARP_SMOKE)
-    )
-    bad = {k: v for k, v in res.items() if v["status"] != "match"}
-    assert len(res) == len(fuzz_oracle.TIMEWARP_SMOKE)
-    assert not bad, bad
+    _assert_mini_sweep(sweep, "timewarp", fuzz_oracle.TIMEWARP_SMOKE)
 
 
-def test_fuzz_unicode_mini_sweep(spark, tmp_path):
+def test_fuzz_unicode_mini_sweep(sweep):
     """Seeded unicode mini-sweep (CJK / astral emoji / NFD-vs-NFC /
     RTL / casing traps / non-ASCII whitespace in every name+text
     column): pins the U+0130 full-vs-simple case-mapping contract the
     r9 unicode wave caught (every oracle lowers corpus text via
     _LOWER_TEXT) across the widest text-feature surfaces."""
-    for name in fuzz_oracle.UNICODE_SMOKE:
-        assert name in QUERIES and name in ORACLES, name
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    base = fuzz_oracle.load_base("/root/testdata/sf0.001")
-    vdir = str(tmp_path / "fz_mini_unicode")
-    fuzz_oracle.write_variant(base, fuzz_oracle.v_unicode, 20260816, vdir)
-    res = fuzz_oracle.run_variant(
-        spark, mod, "unicode", vdir, list(fuzz_oracle.UNICODE_SMOKE)
-    )
-    bad = {k: v for k, v in res.items() if v["status"] != "match"}
-    assert len(res) == len(fuzz_oracle.UNICODE_SMOKE)
-    assert not bad, bad
+    _assert_mini_sweep(sweep, "unicode", fuzz_oracle.UNICODE_SMOKE)
 
 
-def test_fuzz_badjson_mini_sweep(spark, tmp_path):
+def test_fuzz_badjson_mini_sweep(sweep):
     """Seeded badjson mini-sweep (malformed + edge-typed JSON in
     events.props — r10): pins the JSON coercion contracts in
     plans/catalog.py across every props consumer. Spark 4 defaults to
@@ -168,22 +141,7 @@ def test_fuzz_badjson_mini_sweep(spark, tmp_path):
     ('{"k": "oops"}') ABORTED f03/c10 outright; the engine now uses
     try_cast / strict from_json / try_variant_get, and each oracle
     carries the matching DuckDB spelling."""
-    for name in fuzz_oracle.BADJSON_SMOKE:
-        assert name in QUERIES and name in ORACLES, name
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    base = fuzz_oracle.load_base("/root/testdata/sf0.001")
-    vdir = str(tmp_path / "fz_mini_badjson")
-    fuzz_oracle.write_variant(base, fuzz_oracle.v_badjson, 20260816, vdir)
-    res = fuzz_oracle.run_variant(
-        spark, mod, "badjson", vdir, list(fuzz_oracle.BADJSON_SMOKE)
-    )
-    bad = {k: v for k, v in res.items() if v["status"] != "match"}
-    assert len(res) == len(fuzz_oracle.BADJSON_SMOKE)
-    assert not bad, bad
+    _assert_mini_sweep(sweep, "badjson", fuzz_oracle.BADJSON_SMOKE)
 
 
 def test_verify_sf1_cc_duckdb_oracle_on_known_graph(tmp_path):
@@ -192,16 +150,9 @@ def test_verify_sf1_cc_duckdb_oracle_on_known_graph(tmp_path):
     (CORRECTNESS_SF1.json) — pin it against a graph whose components
     are known by construction: two chains (min-label must propagate
     across diameter > 1), a clique, an isolated edge."""
-    import os
-    import sys
-
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    scripts = os.path.join(os.path.dirname(__file__), "..", "scripts")
-    if scripts not in sys.path:
-        sys.path.insert(0, scripts)
     from verify_sf1_cc import duckdb_components
 
     edges = [  # chain 1-2-3-4, chain 10-11-12, clique {20,21,22}, edge 30-31
@@ -224,7 +175,7 @@ def test_verify_sf1_cc_duckdb_oracle_on_known_graph(tmp_path):
             30: (30, 2), 31: (30, 2)}
     assert got == want
 
-def test_fuzz_longdoc_mini_sweep(spark, tmp_path):
+def test_fuzz_longdoc_mini_sweep(sweep):
     """Seeded longdoc mini-sweep (r11): pathological document LENGTH
     regimes (30k repeated tokens, 25k distinct tokens, a single
     120k-char token, periodic text, 1-char token flood, cased-trap
@@ -235,19 +186,4 @@ def test_fuzz_longdoc_mini_sweep(spark, tmp_path):
     doc length and HUNG on these shapes while the engine stayed
     linear (q_llm._DSH3/_dshk/_WINNOW_ORACLE now use element
     indexing). A timeout here means the quadratic came back."""
-    for name in fuzz_oracle.LONGDOC_SMOKE:
-        assert name in QUERIES and name in ORACLES, name
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    base = fuzz_oracle.load_base("/root/testdata/sf0.001")
-    vdir = str(tmp_path / "fz_mini_longdoc")
-    fuzz_oracle.write_variant(base, fuzz_oracle.v_longdoc, 20260816, vdir)
-    res = fuzz_oracle.run_variant(
-        spark, mod, "longdoc", vdir, list(fuzz_oracle.LONGDOC_SMOKE)
-    )
-    bad = {k: v for k, v in res.items() if v["status"] != "match"}
-    assert len(res) == len(fuzz_oracle.LONGDOC_SMOKE)
-    assert not bad, bad
+    _assert_mini_sweep(sweep, "longdoc", fuzz_oracle.LONGDOC_SMOKE)
