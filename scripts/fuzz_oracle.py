@@ -9,10 +9,9 @@ empty inputs, duplicate primary keys, all-equal sort keys (rank
 nondeterminism), non-finite doubles, unicode/empty text, heavy skew.
 
 This script generates SEEDED adversarial variants of all ten fixture
-tables, writes each variant to its own parquet dir (unique basename —
-plans/q_sources._scratch keys its roundtrip scratch on the basename),
-and replays every catalog query on Spark vs its oracle on DuckDB,
-compared through tests/oracle.py.
+tables, writes each variant to its own parquet dir, and replays every
+catalog query on Spark vs its oracle on DuckDB, compared through
+tests/oracle.py.
 Both engines read identical bytes, so any divergence is a real
 engine-vs-SQL-semantics finding, not fixture luck.
 
@@ -28,6 +27,7 @@ error. Per-query line format mirrors verify_driver.py.
 from __future__ import annotations
 
 import argparse
+import glob
 import json
 import os
 import shutil
@@ -45,6 +45,7 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 from sports_betting_data_pipeline_spark.io import TABLES, table_path  # noqa: E402
+from sports_betting_data_pipeline_spark.plans.q_sources import _scratch  # noqa: E402
 from tests.oracle import connect, frame_mismatch, load_entry  # noqa: E402
 
 FACTS = ["orders", "lineitem", "events", "documents", "embeddings"]
@@ -710,56 +711,64 @@ def write_variant(base, variant_fn, seed: int, out_dir: str) -> None:
 
 
 def run_variant(spark, mod, variant: str, sf_dir: str, only: list[str]) -> dict:
-    qs, osql = mod.queries(), mod.oracle_sql()
-    con = connect(sf_dir)
-    results = {}
-    for name in sorted(qs):
-        if only and not any(s in name for s in only):
-            continue
-        skip_reason = KNOWN_CONTRACT_SKIPS.get((variant, name))
-        if skip_reason:
-            results[name] = {"status": "skipped_contract",
-                             "detail": skip_reason}
-            print(f"  {variant}/{name}: skipped_contract ({skip_reason})")
-            continue
-        t0 = time.time()
-        s_err = o_err = None
-        sdf = odf = None
-        try:
-            sdf = qs[name](spark, sf_dir).toPandas()
-        except Exception as exc:  # noqa: BLE001
-            s_err = f"{type(exc).__name__}: {exc}"
-        finally:
-            spark.catalog.clearCache()
-        if name in osql:
+    """Replay the catalog (or the ``only`` filter) on the variant at
+    ``sf_dir``, Spark against the DuckDB oracle; return each query's
+    result. The roundtrip scratch the queries write for this input dir
+    (plans/q_sources._scratch) is removed afterwards."""
+    try:
+        qs, osql = mod.queries(), mod.oracle_sql()
+        con = connect(sf_dir)
+        results = {}
+        for name in sorted(qs):
+            if only and not any(s in name for s in only):
+                continue
+            skip_reason = KNOWN_CONTRACT_SKIPS.get((variant, name))
+            if skip_reason:
+                results[name] = {"status": "skipped_contract",
+                                 "detail": skip_reason}
+                print(f"  {variant}/{name}: skipped_contract ({skip_reason})")
+                continue
+            t0 = time.time()
+            s_err = o_err = None
+            sdf = odf = None
             try:
-                odf = con.execute(osql[name]).fetch_df()
+                sdf = qs[name](spark, sf_dir).toPandas()
             except Exception as exc:  # noqa: BLE001
-                o_err = f"{type(exc).__name__}: {exc}"
-        else:
-            status = "rows_only_ok" if s_err is None else "spark_error"
-            results[name] = {"status": status, "err": s_err,
+                s_err = f"{type(exc).__name__}: {exc}"
+            finally:
+                spark.catalog.clearCache()
+            if name in osql:
+                try:
+                    odf = con.execute(osql[name]).fetch_df()
+                except Exception as exc:  # noqa: BLE001
+                    o_err = f"{type(exc).__name__}: {exc}"
+            else:
+                status = "rows_only_ok" if s_err is None else "spark_error"
+                results[name] = {"status": status, "err": s_err,
+                                 "sec": round(time.time() - t0, 2)}
+                print(f"  {variant}/{name}: {status}"
+                      + (f" {s_err.splitlines()[0][:160]}" if s_err else ""))
+                continue
+            if s_err and o_err:
+                status, detail = "both_error", f"spark={s_err} oracle={o_err}"
+            elif s_err:
+                status, detail = "spark_error", s_err
+            elif o_err:
+                status, detail = "oracle_error", o_err
+            else:
+                why = frame_mismatch(sdf, odf)
+                status, detail = ("match", "") if why is None else ("mismatch", why)
+            results[name] = {"status": status, "detail": detail[:500],
+                             "rows": None if sdf is None else len(sdf),
                              "sec": round(time.time() - t0, 2)}
-            print(f"  {variant}/{name}: {status}"
-                  + (f" {s_err.splitlines()[0][:160]}" if s_err else ""))
-            continue
-        if s_err and o_err:
-            status, detail = "both_error", f"spark={s_err} oracle={o_err}"
-        elif s_err:
-            status, detail = "spark_error", s_err
-        elif o_err:
-            status, detail = "oracle_error", o_err
-        else:
-            why = frame_mismatch(sdf, odf)
-            status, detail = ("match", "") if why is None else ("mismatch", why)
-        results[name] = {"status": status, "detail": detail[:500],
-                         "rows": None if sdf is None else len(sdf),
-                         "sec": round(time.time() - t0, 2)}
-        line = f"  {variant}/{name}: {status}"
-        if detail:
-            line += " " + detail.splitlines()[0][:160]
-        print(line)
-    return results
+            line = f"  {variant}/{name}: {status}"
+            if detail:
+                line += " " + detail.splitlines()[0][:160]
+            print(line)
+        return results
+    finally:
+        for path in glob.glob(_scratch(sf_dir, "*")):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def main() -> int:

@@ -47,7 +47,6 @@ def decontaminate_hits(
     text_col: str = "text",
     k: int = 5,
     tokens_col: str | None = None,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Eval-set contamination detection (the n-gram-overlap rule used
     for pretraining decontamination): a corpus doc is contaminated if
@@ -85,21 +84,15 @@ def decontaminate_hits(
         F.col(id_col).alias(id_col),
         F.explode(sh).alias("_shingle"),
     )
-    # Broadcast the benchmark side EXPLICITLY by default: an eval
-    # suite doesn't scale with the corpus, so the corpus's exploded
-    # (id, shingle) rows should never shuffle for this join. AQE would
-    # reach the same join strategy only AFTER writing the corpus
-    # side's shuffle map outputs; the static broadcast skips that
-    # write entirely (the only shuffle left is the tiny hits
-    # aggregation). The broadcast size scales with benchmark SHINGLE
-    # volume (docs × tokens), not doc count — a very large suite
-    # (tens of millions of exploded shingle rows) should pass
-    # broadcast_benchmark=False and let AQE pick the join, rather
-    # than force a build past the broadcast limits.
-    if broadcast_benchmark:
-        bench_sh = F.broadcast(bench_sh)
+    # Broadcast the benchmark side EXPLICITLY: an eval suite doesn't
+    # scale with the corpus, so the corpus's exploded (id, shingle) rows
+    # should never shuffle for this join. AQE would reach the same join
+    # strategy only AFTER writing the corpus side's shuffle map outputs;
+    # the static broadcast skips that write entirely (the only shuffle
+    # left is the tiny hits aggregation). The broadcast size scales with
+    # benchmark SHINGLE volume (docs × tokens), not doc count.
     return (
-        corp_sh.join(bench_sh, on="_shingle")
+        corp_sh.join(F.broadcast(bench_sh), on="_shingle")
         .groupBy(id_col)
         .agg(F.count_distinct("_bid").alias("n_bench_hits"))
     )

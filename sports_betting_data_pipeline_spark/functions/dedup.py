@@ -713,7 +713,6 @@ def simhash_neardup_pairs(
     max_hamming: int = 8,
     prefix_bits: int = 16,
     probes: int = 1,
-    collapse_exact: bool = False,
 ) -> DataFrame:
     """SimHash near-dup pairs blocked by signature prefix, with
     optional ROTATION MULTI-PROBE.
@@ -731,41 +730,7 @@ def simhash_neardup_pairs(
     clean window is guaranteed by pigeonhole when windows are
     disjoint). Candidates are deduped before the Hamming verify, and
     the join still shuffles only (probe, bucket, id, sig) longs.
-
-    ``collapse_exact`` is the duplicate-block SKEW GUARD
-    (minhash_lsh_candidates' r8 lesson applied here): d byte-identical
-    docs share one signature, so every probe puts all d in ONE bucket
-    and the self-join goes locally O(d²) on that key — a 20% block at
-    corpus scale is a straggler task. With it, exact-text duplicates
-    (sha2 of the raw text — conservative: identical text ⇒ identical
-    token features ⇒ identical signature, Hamming 0) collapse to a
-    min-id representative before signing, and members re-attach as
-    (rep, member, hamming 0) star edges. Like the MinHash collapse,
-    the output is the star not the clique — connected components are
-    identical, per-pair listings within a block are not — and the
-    catalog queries (l09/l58) keep the default False for oracle
-    parity.
     """
-    star = None
-    if collapse_exact:
-        w_txt = Window.partitionBy("_tkey")
-        members = (
-            df.select(F.col(id_col).alias("_id"), F.col(text_col))
-            .withColumn(
-                "_tkey", F.sha2(F.col(text_col).cast("binary"), 256)
-            )
-            .withColumn("_rep", F.min("_id").over(w_txt))
-            .repartition("_id")
-            .cache()
-        )
-        star = members.filter(F.col("_id") != F.col("_rep")).select(
-            F.col("_rep").alias("id_a"),  # rep = min id, so id_a < id_b
-            F.col("_id").alias("id_b"),
-            F.lit(0).cast("long").alias("hamming"),  # hamming64's type
-        )
-        df = members.filter(F.col("_id") == F.col("_rep")).select(
-            F.col("_id").alias(id_col), text_col
-        )
     sig = simhash_signatures(df, id_col, text_col)
     step = 64 // probes
 
@@ -803,7 +768,7 @@ def simhash_neardup_pairs(
     right = bkt.select(
         "probe", "bucket", F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b")
     )
-    pairs = (
+    return (
         left.join(right, on=["probe", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
@@ -814,9 +779,6 @@ def simhash_neardup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    if star is not None:
-        pairs = pairs.unionByName(star)
-    return pairs
 
 
 # ---------------------------------------------------------------------------
@@ -829,7 +791,6 @@ def containment_prefix_pairs(
     block_col: str,
     threshold_num: int = 9,
     threshold_den: int = 10,
-    collapse_exact: bool = False,
 ) -> DataFrame:
     """EXACT containment join C(A,B) = |A∩B|/|A| ≥ t via prefix
     filtering over an inverted token index — the production-scale
@@ -872,20 +833,6 @@ def containment_prefix_pairs(
     prefix makes probe×posting products tiny; on this fixture's
     degenerate 31-token/lang vocab the candidate set degrades to
     ~all within-block pairs — a property of the data, not the plan.
-
-    ``collapse_exact`` is the duplicate-block SKEW GUARD (the r8
-    MinHash/SimHash lesson applied to the asymmetric path): d docs
-    with an identical DISTINCT-TOKEN SET in one block put d entries
-    in every posting list of their prefix tokens — O(d²·p) candidate
-    rows from one group, each paying an array-intersect verify. With
-    it, same-(block, token-set) groups collapse to a min-id
-    representative before indexing, and members re-attach as star
-    edges in BOTH directions ((m, rep) and (rep, m), containment =
-    jaccard = 1.0 exactly, by definition of an identical set). Like
-    the symmetric collapses, output is star + representative-level
-    pairs: connectivity identical, per-pair listings within a group
-    re-rooted to the representative. The catalog queries (l56/l57)
-    keep the default False for oracle parity.
     """
     from sports_betting_data_pipeline_spark.io import widen_for_compute
 
@@ -928,40 +875,6 @@ def containment_prefix_pairs(
         .repartition(F.col("_id"))
         .cache()
     )
-    star = None
-    if collapse_exact:
-        # Set key scoped to the block: identical docs in DIFFERENT
-        # blocks never pair in the plain output, so collapsing across
-        # blocks would forge edges. sha2-256 over the sorted set for
-        # the same birthday-regime reason as the MinHash _setkey.
-        w_set = Window.partitionBy("_blk", "_setkey")
-        members = (
-            base.withColumn(
-                "_setkey",
-                F.sha2(F.concat_ws("\x01", F.array_sort("_sh")), 256),
-            )
-            .withColumn("_rep", F.min("_id").over(w_set))
-            .repartition("_id")
-            .cache()
-        )
-        dup = members.filter(F.col("_id") != F.col("_rep"))
-        one = F.round(F.lit(1.0), 6)
-        star = dup.select(
-            F.col("_id").alias("contained_id"),
-            F.col("_rep").alias("container_id"),
-            one.alias("containment"),
-            one.alias("jaccard"),
-        ).unionByName(
-            dup.select(
-                F.col("_rep").alias("contained_id"),
-                F.col("_id").alias("container_id"),
-                one.alias("containment"),
-                one.alias("jaccard"),
-            )
-        )
-        base = members.filter(F.col("_id") == F.col("_rep")).select(
-            "_id", "_blk", "_sh", "_n"
-        )
     tok = base.select("_id", "_blk", "_n", F.explode("_sh").alias("_tok"))
     dfreq = tok.groupBy("_blk", "_tok").agg(F.count(F.lit(1)).alias("_df"))
     # prefix length p = n − ⌈n·num/den⌉ + 1, in exact integer math
@@ -1014,7 +927,7 @@ def containment_prefix_pairs(
             >= threshold_num / threshold_den
         )
     )
-    out = verified.select(
+    return verified.select(
         F.col("_aid").alias("contained_id"),
         F.col("_bid").alias("container_id"),
         F.round(F.col("_inter") / F.col("_na").cast("double"), 6).alias(
@@ -1030,17 +943,18 @@ def containment_prefix_pairs(
             6,
         ).alias("jaccard"),
     )
-    if star is not None:
-        out = out.unionByName(star)
-    return out
+
+
+# connected_components: propagation levels fused into one Spark job, and
+# the level cap past which the labels of the last level are returned.
+_CC_FUSE = 3
+_CC_MAX_LEVELS = 25
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 25,
-    fuse: int = 3,
     size_hint: int | None = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation —
@@ -1051,18 +965,18 @@ def connected_components(
     itself; each propagation level every node takes the min of its own
     label and its neighbors' labels; converged when no label changes
     (≤ graph diameter levels — near-dup clusters are dense, so
-    typically 2-3). ``max_iter`` counts propagation LEVELS;
-    ``max_iter=0`` returns identity labels with no propagation.
+    typically 2-3). At most ``_CC_MAX_LEVELS`` propagation LEVELS run;
+    a deeper graph returns the labels of its last level.
 
     The per-level cost at fixture scale is a measured ~0.35 s DRIVER
     floor (plan build + localCheckpoint physical planning — SCALE.md
     §Round-6), not data cost, so the scheduling unit here is a fused
-    JOB of ``fuse`` consecutive levels: one plan chains ``fuse``
+    JOB of ``_CC_FUSE`` consecutive levels: one plan chains them as
     join+agg levels and the convergence comparison between its last
     two levels, so a diameter-≤2 graph (every dedup fixture) finishes
     in ONE job where the per-level loop needed three (init, propagate,
-    confirm). Deeper graphs continue in fused jobs of ``fuse`` levels;
-    each job is one action whose driver-side ``changed`` count is the
+    confirm). Deeper graphs continue in fused jobs of ``_CC_FUSE``
+    levels; each job is one action whose driver-side ``changed`` count is the
     materializing job, exactly as before. Comparing the job's last two
     levels is a sound convergence test: labels decrease monotonically,
     so level k == level k-1 means level k-1 was already a fixed point.
@@ -1072,17 +986,6 @@ def connected_components(
     Output: one row per node appearing in ``edges`` —
     ``(node, component)``.
     """
-    if max_iter <= 0:
-        # ADVICE r6: the fused first level used to run unconditionally,
-        # silently raising the parameter's floor to 1 — max_iter=0 now
-        # returns identity labels with no propagation work, matching
-        # the loop-based implementation's original contract.
-        nodes = (
-            edges.select(
-                F.explode(F.array(F.col(src), F.col(dst))).alias("node")
-            ).distinct()
-        )
-        return nodes.select("node", F.col("node").alias("component"))
     # Materialize the symmetrized edge list ONCE: it is re-joined every
     # level, and without a barrier the entire upstream edge-generation
     # pipeline (e.g. the LSH candidate join) would re-execute per
@@ -1180,32 +1083,17 @@ def connected_components(
                     "node", F.least(F.col("node"), F.col("_mn")).alias("component")
                 )
             )
-            levels_done = 1
-            last = None
-            for _ in range(min(max(fuse, 1), max_iter) - 1):
-                last = _level(labels)
-                labels = last.select("node", "component")
-                levels_done += 1
-            if last is None:
-                # First job was the bare level-1 aggregation (fuse == 1 or
-                # max_iter == 1): it carries no _old column, so there is no
-                # convergence info yet.
-                labels = labels.localCheckpoint(eager=True)
-                if max_iter == 1:
-                    return labels
-                changed = 1  # unknown; the loop's first job decides
-            else:
-                checkpointed = last.localCheckpoint(eager=False)
-                changed = checkpointed.filter(
-                    F.col("component") != F.col("_old")
-                ).count()
-                labels = checkpointed.select("node", "component")
-            while changed != 0 and levels_done < max_iter:
-                last = None
-                for _ in range(min(max(fuse, 1), max_iter - levels_done)):
+            # The first fused job holds level 1 and _CC_FUSE - 1 join
+            # levels; each later job holds _CC_FUSE join levels.
+            levels_done, changed = 1, 1
+            while changed != 0 and levels_done < _CC_MAX_LEVELS:
+                fused = min(
+                    _CC_FUSE - (levels_done == 1), _CC_MAX_LEVELS - levels_done
+                )
+                for _ in range(fused):
                     last = _level(labels)
                     labels = last.select("node", "component")
-                    levels_done += 1
+                levels_done += fused
                 checkpointed = last.localCheckpoint(eager=False)
                 changed = checkpointed.filter(
                     F.col("component") != F.col("_old")

@@ -84,15 +84,9 @@ def uniq_token_ratio(text: Column) -> Column:
     return F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1))
 
 
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
-    # None means "use the default list"; an explicitly EMPTY list means
-    # "no stopwords defined" and must yield ratio 0.0, not silently
-    # fall back to the defaults (`or` is falsy on []).
-    words = STOPWORDS if stopwords is None else list(stopwords)
-    if not words:
-        return F.lit(0.0)
+def stopword_ratio(text: Column) -> Column:
     toks = ws_tokens(text)
-    hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(*words)))
+    hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(*STOPWORDS)))
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
@@ -181,9 +175,7 @@ def shingles_sql(t: str, k: int = 3) -> str:
     )
 
 
-def shingles_from_tokens(
-    toks: Column, k: int = 3, lowercase: bool = True
-) -> Column:
+def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     """:func:`shingles` from a precomputed ``ws_tokens`` array — the
     shared-tokenization path for composed pipelines (pl02 caches ONE
     token base and feeds every stage). Output is identical to
@@ -192,7 +184,7 @@ def shingles_from_tokens(
     ``lower`` over ``ws_tokens(text)`` (pinned by test). Same
     let-binding-through-transform trick as :func:`shingles` — the
     per-index lambda must not re-evaluate the token pipeline."""
-    base = F.transform(toks, lambda t: F.lower(t)) if lowercase else toks
+    base = F.transform(toks, lambda t: F.lower(t))
     return F.transform(F.array(base), lambda t: _build_shingles(t, k))[0]
 
 

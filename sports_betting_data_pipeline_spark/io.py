@@ -1,4 +1,4 @@
-"""Table readers / writers for the engine.
+"""Table readers for the engine.
 
 The reference's sources are REST scans feeding Python dicts
 (mm_calls.py:52-115, SURVEY.md §2.1 S1-S7); in the Spark engine every
@@ -58,6 +58,12 @@ def _ensure_engine_confs(spark: SparkSession) -> None:
     runtime SQL confs. A static conf cannot be set on a running session
     (every attempt raises CANNOT_MODIFY_STATIC_CONFIG), so static ones
     belong in ``session.get_spark``'s builder.
+
+    This is the one place the engine pins them; every reader and
+    renderer that depends on them calls it. It re-pins on every call
+    rather than once per session, because a caller may reset its
+    session's confs between calls. The price is two py4j round trips
+    (about 1.4 ms on a local[2] session) per call, memo hits of :func:`load_table` included.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -295,50 +301,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for spark.sql use."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Partition-aware parquet writer.
-
-    The 100 TB layout partitions fact tables by a date key (SURVEY.md
-    §4): pass e.g. ``partition_by=["ship_date"]`` so downstream scans
-    get partition pruning.
-    """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def read_json_table(
-    spark: SparkSession, path: str, schema, multiline: bool = False
-) -> DataFrame:
-    """JSON-lines scan with a DECLARED schema — the reference's
-    json.loads ingest (mm_calls.py:74, SURVEY.md §1.1) as a proper
-    source. Never infer on the hot path: inference is a second full
-    read, and a schema drift silently becomes a null column instead
-    of an error surfaced at the boundary."""
-    _ensure_engine_confs(spark)
-    return (
-        spark.read.schema(schema)
-        .option("multiLine", "true" if multiline else "false")
-        .json(path)
-    )
-
-
-def read_csv_table(
-    spark: SparkSession, path: str, schema, header: bool = True
-) -> DataFrame:
-    """CSV scan with a declared schema (the sheet-shaped interchange
-    format, SURVEY.md §2.2 K1 read back)."""
-    _ensure_engine_confs(spark)
-    return (
-        spark.read.schema(schema)
-        .option("header", "true" if header else "false")
-        .csv(path)
-    )

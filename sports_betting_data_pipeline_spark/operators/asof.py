@@ -37,29 +37,25 @@ def asof_join(
     key: str,
     ts: str,
     payload_cols: Sequence[str],
-    how: str = "left",
-    strict: bool = False,
     payload_name: str = "asof",
 ) -> DataFrame:
-    """For each left row, attach the latest right row with
-    ``right.ts <= left.ts`` (``< `` when ``strict``) for the same key.
+    """Left as-of join: for each left row, attach the latest right row
+    with ``right.ts <= left.ts`` for the same key.
 
-    Returns the left rows plus one struct column ``payload_name``
+    Returns every left row plus one struct column ``payload_name``
     containing ``(ts, *payload_cols)`` of the matched right row (null
-    when no right row precedes; ``how='inner'`` drops those rows).
+    when no right row precedes).
 
     Determinism: if the right side can hold several rows at the same
     (key, ts), pre-aggregate it to one — the window tie-break among
     equal timestamps is otherwise partition-order dependent.
     """
-    if how not in ("left", "inner"):
-        raise ValueError(f"asof_join supports left/inner, got {how!r}")
     for reserved in ("_asof_p", "_ord", payload_name):
         if reserved in left.columns:
             raise ValueError(f"left side may not contain column {reserved!r}")
     payload_t = F.struct(F.col(ts), *[F.col(c) for c in payload_cols])
-    # At equal ts the right row must sort BEFORE the left row for <=
-    # semantics (the left row sees it) and AFTER for strict <.
+    # At equal ts the right row sorts BEFORE the left row, so the left
+    # row sees it (<=).
     # NULL-ts right rows are dropped up front: `right.ts <= left.ts`
     # can never hold for an unknown timestamp, but the ascending sort
     # is NULLS FIRST, so such a row would otherwise sort to the head
@@ -72,9 +68,9 @@ def asof_join(
     r = (
         right.filter(F.col(ts).isNotNull() & F.col(key).isNotNull())
         .select(F.col(key), F.col(ts), payload_t.alias("_asof_p"))
-        .withColumn("_ord", F.lit(1 if strict else 0))
+        .withColumn("_ord", F.lit(0))
     )
-    l = left.withColumn("_ord", F.lit(0 if strict else 1))
+    l = left.withColumn("_ord", F.lit(1))
     merged = l.unionByName(r, allowMissingColumns=True)
 
     w = (
@@ -82,16 +78,13 @@ def asof_join(
         .orderBy(F.col(ts).asc(), F.col("_ord").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = (
+    return (
         merged.withColumn(payload_name, F.last("_asof_p", ignorenulls=True).over(w))
         # left rows are exactly those the union filled with a null
         # payload (right payload structs are never null themselves)
         .filter(F.col("_asof_p").isNull())
         .drop("_asof_p", "_ord")
     )
-    if how == "inner":
-        out = out.filter(F.col(payload_name).isNotNull())
-    return out
 
 
 def range_join_count(

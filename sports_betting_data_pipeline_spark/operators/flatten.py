@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sports_betting_data_pipeline_spark.io import _ensure_engine_confs
 from sports_betting_data_pipeline_spark.operators.temporal import (
     iso_to_eastern_sql,
     ns_epoch_to_eastern_sql,
@@ -140,11 +141,11 @@ def flatten_sheet(events: DataFrame, fidelity: bool = False) -> DataFrame:
     status, competitors, markets per schemas.SPORT_EVENT.
 
     SIDE EFFECT: permanently pins ``spark.sql.session.timeZone=UTC``
-    on the caller's session (the engine-wide contract,
-    operators/temporal.py). It cannot be scoped with a set/restore
-    context manager because the returned DataFrame is lazy — the
-    rendering runs whenever the CALLER consumes the plan, long after
-    any restore would have fired. Callers that need host-local-zone
+    on the caller's session (``io._ensure_engine_confs``, the
+    engine-wide contract of operators/temporal.py). It cannot be scoped
+    with a set/restore context manager because the returned DataFrame
+    is lazy — the rendering runs whenever the CALLER consumes the plan,
+    long after any restore would have fired. Callers that need host-local-zone
     rendering elsewhere should use ``spark.newSession()`` for that
     work.
     """
@@ -152,7 +153,7 @@ def flatten_sheet(events: DataFrame, fidelity: bool = False) -> DataFrame:
     # (operators/temporal.py's session-timezone contract); pin it here
     # like read_events_stream does, so a caller-provided session with
     # a host-local zone cannot double-shift the rendered strings.
-    events.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
+    _ensure_engine_confs(events.sparkSession)
     event_cols = ["event_id", "scheduled", "display_name", "status", "competitors"]
     # Flatten market struct fields to top-level columns right after the
     # explode: keeps every later reference a plain attribute (avoids

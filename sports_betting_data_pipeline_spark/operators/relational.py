@@ -50,23 +50,15 @@ def semi_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFra
     return left.join(F.broadcast(right), on=on, how="left_semi")
 
 
-def enrich_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-    how: str = "inner",
-    broadcast_dim: bool = True,
-) -> DataFrame:
+def enrich_join(fact: DataFrame, dim: DataFrame, on: str | list[str]) -> DataFrame:
     """J1: hash-join enrichment of a fact table with a dim table.
 
     The reference builds ``map_market_by_event_id`` and probes it per
     event, skipping misses (mm_calls.py:98-105) — i.e. an inner hash
-    join with the build side held in memory. Spark's equivalent is a
-    broadcast hash join; ``broadcast_dim=False`` lets AQE/CBO choose
-    (sort-merge or shuffled hash) when the dim is genuinely large.
+    join with the build side held in memory. Spark's equivalent is an
+    inner broadcast hash join.
     """
-    right = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(right, on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how="inner")
 
 
 def deterministic_sample(df: DataFrame, key: str, keep: int, out_of: int) -> DataFrame:
@@ -134,7 +126,6 @@ def salted_join(
     other: DataFrame,
     on: str,
     buckets: int = 16,
-    how: str = "inner",
     seed: int = 42,
 ) -> DataFrame:
     """Skew-mitigated equi-join: spread a hot key across ``buckets``
@@ -148,18 +139,16 @@ def salted_join(
     the skew is known ahead of time and the other side is small enough
     to replicate.
 
-    Only ``inner``/``left`` (skewed-side-preserving) joins are valid:
-    replication would duplicate unmatched right rows for other types.
+    The join is inner. (A right or full outer join would duplicate the
+    replicated side's unmatched rows once per salt.)
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     salted_l = skewed.withColumn(
         "_salt", (F.rand(seed) * buckets).cast("int")
     )
     salted_r = other.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
     )
-    return salted_l.join(salted_r, on=[on, "_salt"], how=how).drop("_salt")
+    return salted_l.join(salted_r, on=[on, "_salt"]).drop("_salt")
 
 
 def stratified_sample(

@@ -11,8 +11,9 @@ aggregate; the oracle runs the same aggregate over the original
 parquet, so any loss in the encode→decode roundtrip (quoting, header
 handling, timestamp rendering, type coercion) breaks the hash match.
 
-Scratch data goes under <repo>/.scratch/ (gitignored), keyed by the
-sf dir so concurrent sf0.01/sf0.1 runs don't collide.
+Scratch data goes under <repo>/.scratch/ (gitignored) as
+``<input dir basename>_<name>``, so runs over sf0.01 and sf0.1 don't
+collide; two input dirs with one basename share their scratch.
 """
 
 from __future__ import annotations

