@@ -13,6 +13,13 @@ group. After each run, untimed (the status store keeps only the last
 shuffle and spill bytes, and counts the executed plan's quadratic join
 nodes. Prints best and median per query beside the BENCH_FULL.json
 value, then one JSON line with every run.
+
+``--plans DIR`` writes each query's optimized logical plan and initial
+physical plan, read on its first run between planning and execution,
+to DIR/<query>@<input dir name>.txt with expression ids (``#12``) and
+exchange ``plan_id=`` masked, so two runs of one commit write the same
+file. (The plan AQE settles on after execution carries stage, RDD and
+node ids that follow completion order, and is not written.)
 """
 
 from __future__ import annotations
@@ -20,6 +27,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -43,14 +51,24 @@ STAGE_SUMS = {
     "shuffle_write_bytes": ("shuffleWriteBytes",),
     "spill_bytes": ("memoryBytesSpilled", "diskBytesSpilled"),
 }
+RUN_IDS = re.compile(r"(#|plan_id=)\d+")
 
 
-def run_once(spark, name: str, sf_dir: str, group: str):
+def plan_text(qe) -> str:
+    """The optimized logical and the physical plan of a planned, not yet
+    executed QueryExecution, run-specific ids masked."""
+    text = (f"== Optimized Logical Plan ==\n{qe.optimizedPlan()}\n\n"
+            f"== Physical Plan ==\n{qe.executedPlan()}\n")
+    return RUN_IDS.sub(r"\1", text)
+
+
+def run_once(spark, name: str, sf_dir: str, group: str, keep_plan: bool):
     """Construct, plan and execute one query cold-cache; return each
-    phase's wall-clock window and the executed DataFrame."""
+    phase's wall-clock window, the executed DataFrame and, with
+    ``keep_plan``, its plan_text read between planning and execution."""
     sc = spark.sparkContext
     spark.catalog.clearCache()
-    windows = {}
+    windows, plan = {}, None
     try:
         for phase in PHASES:
             sc.setJobGroup(f"{group}|{phase}", f"{name} {phase}")
@@ -62,9 +80,11 @@ def run_once(spark, name: str, sf_dir: str, group: str):
             else:
                 execute_planned(df)
             windows[phase] = (start, time.time())
+            if phase == "plan" and keep_plan:
+                plan = plan_text(df._jdf.queryExecution())
     finally:
         sc._jsc.clearJobGroup()
-    return windows, df
+    return windows, df, plan
 
 
 def spark_work(spark, prefix: str, group: str, windows: dict) -> dict:
@@ -105,8 +125,8 @@ def main() -> None:
                     required="SPARK_GRAFT_SF_DIR" not in os.environ,
                     help="input dir, repeatable (default $SPARK_GRAFT_SF_DIR)")
     ap.add_argument("--plans", metavar="DIR",
-                    help="write each executed plan, after its first run, to "
-                         "DIR/<query>@<input dir name>.txt")
+                    help="write each query's plans, before its first run "
+                         "executes, to DIR/<query>@<input dir name>.txt")
     args = ap.parse_args()
     unknown = [n for n in args.queries if n not in QUERIES]
     if unknown:
@@ -129,18 +149,18 @@ def main() -> None:
         for row in results:
             name, sf_dir = row["query"], row["sf_dir"]
             group = f"{prefix}|{rnd}|{name}|{sf_dir}"
-            windows, df = run_once(spark, name, sf_dir, group)
-            qe = df._jdf.queryExecution()
-            plan = qe.executedPlan().toString()
+            keep_plan = bool(args.plans) and rnd == 0
+            windows, df, plan_txt = run_once(spark, name, sf_dir, group, keep_plan)
+            plan = df._jdf.queryExecution().executedPlan().toString()
             run = {f"{p}_s": round(e - s, 4) for p, (s, e) in windows.items()}
             run.update(spark_work(spark, prefix, group, windows))
             run.update({k: plan.count(k) for k in QUADRATIC_NODES})
             row["runs"].append(run)
             print(f"round {rnd}: {name} @ {sf_dir} {json.dumps(run)}", file=sys.stderr)
-            if args.plans and rnd == 0:
+            if keep_plan:
                 tag = os.path.basename(os.path.normpath(sf_dir))
                 with open(os.path.join(args.plans, f"{name}@{tag}.txt"), "w") as fh:
-                    fh.write(spark._jvm.PythonSQLUtils.explainString(qe, "formatted"))
+                    fh.write(plan_txt)
 
     cols = ("best_s", "median_s", "construct_s", "plan_s", "exec_s", "construct_jobs")
     print(f"{'query':<32} {'sf dir':<16}", *(f"{c:>14}" for c in cols), f"bench@sf{ref['sf']}")

@@ -3,8 +3,8 @@
 rows-only catalog query.
 
 Coverage requirements (FIXTURES.md §B):
-- markets WITH and WITHOUT market_lines in the same tree (two-branch
-  explode);
+- markets WITH and WITHOUT market_lines in the same tree (both
+  flatten branches);
 - inner selections lists with length > 1 (branch A must take [0] only,
   branch B iterates all);
 - missing/null optional fields (favourite→"NA", ""-defaults);

@@ -2,7 +2,7 @@
 event tree into the 25-column sheet table (SURVEY.md §2.5 P1-P4;
 reference main.py:40-177).
 
-Reference semantics, re-expressed as a two-branch explode + union:
+The reference loops market by market and takes one of two branches:
 
 - Branch A (market HAS market_lines, main.py:82-133):
   ``event → markets[] → market_lines[] → selections[][]`` — iterates
@@ -14,8 +14,24 @@ Reference semantics, re-expressed as a two-branch explode + union:
   five Market Line columns (main.py:161-165).
 
 The asymmetry (``[0]`` vs full iteration) is intentional reference
-fidelity and is pinned by the golden test
-(tests/test_flatten.py).
+fidelity and is pinned by the golden test (tests/test_flatten.py).
+
+Both branches come out of ONE generator: per market, ``transform`` /
+``filter`` / ``flatten`` build the array of its row structs (branch
+A's or branch B's, chosen per market) and ``inline`` emits them, so
+the plan is one scan, one Generate and no Union. Each row struct
+carries the branch flag ``a``; the cells that differ between branches
+either live in the struct (the five Market Line cells, ``"NA"`` in
+branch B) or test ``a`` (the ``fidelity=True`` renderings). Rows come
+out market by market, the reference's own loop order.
+
+``flatten`` returns NULL when any element is NULL, so every level is
+filtered before it is flattened. That keeps ``explode``'s semantics:
+a NULL ``markets``, market, market line or ``selections`` array and
+an empty ``market_lines`` give no rows; in branch A a NULL or empty
+inner list gives one row with ``""`` selection cells
+(``try_element_at``); in branch B a NULL inner list gives no rows and
+a NULL selection one row with ``""`` cells.
 
 ``fidelity`` flag (SURVEY.md §7 step 3): the reference renders
 timestamps INCONSISTENTLY between branches — branch A converts
@@ -39,17 +55,15 @@ Documented semantic deltas from the reference (all crash-vs-default):
 - ``updated_at`` ns→µs uses exact integer division (reference's
   ``/1e9`` double math can round the last µs digit, main.py:126-128).
 
-Scale notes: the explodes are generator-style (no row buffering); the
-two branches each scan the source, but the scan is columnar and the
-branch predicate (`market_lines IS NULL`) prunes early. Output grows
-by the selection fan-out only — there is no shuffle anywhere in this
-operator; it is embarrassingly parallel per input partition.
+Scale notes: the generator emits rows without buffering the tree, and
+there is no shuffle anywhere in this operator; it is embarrassingly
+parallel per input partition. Output grows by the selection fan-out
+only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from sports_betting_data_pipeline_spark.io import _ensure_engine_confs
 from sports_betting_data_pipeline_spark.operators.temporal import (
@@ -59,12 +73,51 @@ from sports_betting_data_pipeline_spark.operators.temporal import (
 )
 from sports_betting_data_pipeline_spark.schemas import SHEET_COLUMNS
 
-# The 25-column projections below are emitted as SQL TEXT and parsed
-# server-side (one F.expr per output column): the Column-operator form
-# of this operator was ~4,400 Py4J round trips of pure construction
-# (~0.9 s per flatten_sheet call — r6 profiling), all of it tiny
-# expression-builder chatter. Trees are identical; the flatten goldens
-# and the p01 oracle pin the rendering cell-exact.
+# The operator is two selectExpr calls whose SQL text is parsed
+# server-side: the Column-operator form was ~4,400 Py4J round trips of
+# pure construction (~0.9 s per flatten_sheet call — r6 profiling), all
+# of it tiny expression-builder chatter. The flatten goldens and the
+# p01 oracle pin the rendering cell-exact.
+
+_EVENT_COLUMNS = ("event_id", "scheduled", "display_name", "status", "competitors")
+
+_MARKET_FIELDS = (
+    "'m_id', m.id, 'm_name', m.name, 'm_type', m.type, "
+    "'m_status', m.status, 'm_updated_at', m.updated_at"
+)
+
+# Branch A (main.py:82-133): a row per outer selection group of each
+# market line, taking the group's [0] (main.py:120); try_element_at
+# gives null on an empty or null group where the reference would
+# IndexError. favourite defaults to "NA" (main.py:118).
+_BRANCH_A = (
+    "flatten(transform(filter(m.market_lines, ml -> ml.selections IS NOT NULL), "
+    "ml -> transform(ml.selections, g -> named_struct('a', true, "
+    f"{_MARKET_FIELDS}, "
+    "'ml_id', ml.id, 'ml_name', ml.name, 'ml_line', CAST(ml.line AS STRING), "
+    "'ml_favourite', coalesce(ml.favourite, 'NA'), 'ml_type', ml.type, "
+    "'sel', try_element_at(g, 1)))))"
+)
+
+# Branch B (main.py:134-176): a row per element of every inner group,
+# "NA" in the five Market Line cells (main.py:161-165).
+_BRANCH_B = (
+    "flatten(transform(filter(m.selections, g -> g IS NOT NULL), "
+    "g -> transform(g, s -> named_struct('a', false, "
+    f"{_MARKET_FIELDS}, "
+    "'ml_id', 'NA', 'ml_name', 'NA', 'ml_line', 'NA', "
+    "'ml_favourite', 'NA', 'ml_type', 'NA', 'sel', s))))"
+)
+
+# A null market, and a branch-B market with null selections, have no
+# rows. They are filtered out, not mapped to NULL: flatten() of an
+# array holding a NULL is NULL, which would drop the event's other
+# markets too.
+_ROWS = (
+    "inline(flatten(transform("
+    "filter(markets, m -> m.market_lines IS NOT NULL OR m.selections IS NOT NULL), "
+    f"m -> CASE WHEN m.market_lines IS NOT NULL THEN {_BRANCH_A} ELSE {_BRANCH_B} END)))"
+)
 
 
 def _s(x: str) -> str:
@@ -72,65 +125,52 @@ def _s(x: str) -> str:
     return f"coalesce(CAST({x} AS STRING), '')"
 
 
-def _competitor(df_col: str, idx: int, field: str) -> str:
+def _competitor(idx: int, field: str) -> str:
     # competitors[idx].field with "" default; reference indexes [0]/[1]
     # unguarded (main.py:97-110) — we default instead of raising
     # (try_element_at: null, not ANSI error, on short arrays).
-    return _s(f"try_element_at({df_col}, {idx + 1}).{field}")
+    return _s(f"try_element_at(competitors, {idx + 1}).{field}")
 
 
-def _event_columns(fidelity_branch_b: bool = False) -> list[tuple[str, str]]:
-    """(sql, alias) event-level columns shared by both branches
-    (main.py:88-110)."""
-    if fidelity_branch_b:
+def _cells(fidelity: bool) -> dict[str, str]:
+    """SQL of each sheet cell over one generated row (main.py:88-131)."""
+    # C1: ISO-Z → America/New_York aware string (main.py:89-95).
+    scheduled = iso_to_eastern_sql("scheduled")
+    # C3: epoch-ns → US/Eastern aware string (main.py:126-131).
+    updated = ns_epoch_to_eastern_sql("m_updated_at")
+    if fidelity:
         # C2: branch B passes `scheduled` through raw (main.py:141).
-        scheduled = _s("scheduled")
-    else:
-        # C1: ISO-Z → America/New_York aware string (main.py:89-95).
-        scheduled = _s(iso_to_eastern_sql("scheduled"))
-    return [
-        (_s("event_id"), "Event ID"),
-        (scheduled, "Event Scheduled Time"),
-        (_s("display_name"), "Event Name"),
-        (_competitor("competitors", 0, "display_name"), "Event Competitor 1"),
-        (
-            _competitor("competitors", 0, "abbreviation"),
-            "Event Competitor 1 Abbreviation",
-        ),
-        (_competitor("competitors", 0, "side"), "Event Competitor 1 Side"),
-        (_competitor("competitors", 1, "display_name"), "Event Competitor 2"),
-        (
-            _competitor("competitors", 1, "abbreviation"),
-            "Event Competitor 2 Abbreviation",
-        ),
-        (_competitor("competitors", 1, "side"), "Event Competitor 2 Side"),
-    ]
-
-
-def _market_columns() -> list[tuple[str, str]]:
-    """Market-level columns (main.py:111-114)."""
-    return [
-        (_s("m_id"), "Market ID"),
-        (_s("m_name"), "Market Name"),
-        (_s("m_type"), "Market Type"),
-        (_s("m_status"), "Market Status"),
-    ]
-
-
-def _selection_columns(sel: str) -> list[tuple[str, str]]:
-    """Selection-level columns (main.py:120-125 / 166-171)."""
-    return [
-        (_s(f"{sel}.line_id"), "Selection ID"),
-        (_s(f"{sel}.display_name"), "Selection Name"),
-        (_s(f"{sel}.odds"), "Selection Odds"),
-        (_s("status"), "Event Status"),
-        (_s(f"{sel}.stake"), "Selection Stake"),
-        (_s(f"{sel}.value"), "Selection Value"),
-    ]
-
-
-def _exprs(pairs: list[tuple[str, str]]) -> list[Column]:
-    return [F.expr(sql).alias(alias) for sql, alias in pairs]
+        scheduled = f"CASE WHEN a THEN {scheduled} ELSE scheduled END"
+        # C4: naive server-local rendering (main.py:172-174); engine
+        # sessions are pinned UTC so this is the naive-UTC string.
+        updated = f"CASE WHEN a THEN {updated} ELSE {ns_epoch_to_naive_sql('m_updated_at')} END"
+    return {
+        "Event ID": _s("event_id"),
+        "Event Scheduled Time": _s(scheduled),
+        "Event Name": _s("display_name"),
+        "Event Competitor 1": _competitor(0, "display_name"),
+        "Event Competitor 1 Abbreviation": _competitor(0, "abbreviation"),
+        "Event Competitor 1 Side": _competitor(0, "side"),
+        "Event Competitor 2": _competitor(1, "display_name"),
+        "Event Competitor 2 Abbreviation": _competitor(1, "abbreviation"),
+        "Event Competitor 2 Side": _competitor(1, "side"),
+        "Market ID": _s("m_id"),
+        "Market Name": _s("m_name"),
+        "Market Type": _s("m_type"),
+        "Market Status": _s("m_status"),
+        "Market Line ID": _s("ml_id"),
+        "Market Line Name": _s("ml_name"),
+        "Market Line": _s("ml_line"),
+        "Market Line Favourite": _s("ml_favourite"),
+        "Market Line Type": _s("ml_type"),
+        "Selection ID": _s("sel.line_id"),
+        "Selection Name": _s("sel.display_name"),
+        "Selection Odds": _s("sel.odds"),
+        "Event Status": _s("status"),
+        "Selection Stake": _s("sel.stake"),
+        "Selection Value": _s("sel.value"),
+        "Market Updated": _s(updated),
+    }
 
 
 def flatten_sheet(events: DataFrame, fidelity: bool = False) -> DataFrame:
@@ -154,113 +194,7 @@ def flatten_sheet(events: DataFrame, fidelity: bool = False) -> DataFrame:
     # like read_events_stream does, so a caller-provided session with
     # a host-local zone cannot double-shift the rendered strings.
     _ensure_engine_confs(events.sparkSession)
-    event_cols = ["event_id", "scheduled", "display_name", "status", "competitors"]
-    # Flatten market struct fields to top-level columns right after the
-    # explode: keeps every later reference a plain attribute (avoids
-    # Catalyst nested-field-extraction rewrites across chained
-    # explode+union plans) and lets column pruning drop whole subtrees.
-    exploded = events.select(
-        *event_cols,
-        F.explode("markets").alias("m"),
-    ).select(
-        *event_cols,
-        F.col("m.id").alias("m_id"),
-        F.col("m.name").alias("m_name"),
-        F.col("m.type").alias("m_type"),
-        F.col("m.status").alias("m_status"),
-        F.col("m.updated_at").alias("m_updated_at"),
-        F.col("m.market_lines").alias("m_market_lines"),
-        F.col("m.selections").alias("m_selections"),
+    cells = _cells(fidelity)
+    return events.selectExpr(*_EVENT_COLUMNS, _ROWS).selectExpr(
+        *(f"{cells[c]} AS `{c}`" for c in SHEET_COLUMNS)
     )
-
-    # --- Branch A: markets WITH lines (main.py:82-133) -----------------
-    branch_a = (
-        exploded.filter(F.col("m_market_lines").isNotNull())
-        .select(
-            *event_cols,
-            "m_id",
-            "m_name",
-            "m_type",
-            "m_status",
-            "m_updated_at",
-            F.explode("m_market_lines").alias("ml"),
-        )
-        .select(
-            *event_cols,
-            "m_id",
-            "m_name",
-            "m_type",
-            "m_status",
-            "m_updated_at",
-            F.col("ml.id").alias("ml_id"),
-            F.col("ml.name").alias("ml_name"),
-            F.col("ml.line").alias("ml_line"),
-            F.col("ml.favourite").alias("ml_favourite"),
-            F.col("ml.type").alias("ml_type"),
-            F.explode("ml.selections").alias("sel_group"),
-        )
-        # [0] only (main.py:120); try_element_at -> null on empty inner
-        # lists where the reference would IndexError.
-        .withColumn("sel", F.try_element_at("sel_group", F.lit(1)))
-    )
-    a_rows = branch_a.select(
-        *_exprs(_event_columns(fidelity_branch_b=False)),
-        *_exprs(_market_columns()),
-        *_exprs([
-            (_s("ml_id"), "Market Line ID"),
-            (_s("ml_name"), "Market Line Name"),
-            (_s("ml_line"), "Market Line"),
-            ("coalesce(ml_favourite, 'NA')", "Market Line Favourite"),
-            (_s("ml_type"), "Market Line Type"),
-        ]),
-        *_exprs(_selection_columns("sel")),
-        # C3: epoch-ns → US/Eastern aware string (main.py:126-131).
-        *_exprs([
-            (_s(ns_epoch_to_eastern_sql("m_updated_at")), "Market Updated"),
-        ]),
-    )
-
-    # --- Branch B: markets WITHOUT lines (main.py:134-176) -------------
-    branch_b = (
-        exploded.filter(F.col("m_market_lines").isNull())
-        .select(
-            *event_cols,
-            "m_id",
-            "m_name",
-            "m_type",
-            "m_status",
-            "m_updated_at",
-            F.explode("m_selections").alias("sel_group"),
-        )
-        .select(
-            *event_cols,
-            "m_id",
-            "m_name",
-            "m_type",
-            "m_status",
-            "m_updated_at",
-            F.explode("sel_group").alias("sel"),  # ALL inner elements
-        )
-    )
-    if fidelity:
-        # C4: naive server-local rendering (main.py:172-174); engine
-        # sessions are pinned UTC so this is the naive-UTC string.
-        updated_b = _s(ns_epoch_to_naive_sql("m_updated_at"))
-    else:
-        updated_b = _s(ns_epoch_to_eastern_sql("m_updated_at"))
-    b_rows = branch_b.select(
-        *_exprs(_event_columns(fidelity_branch_b=fidelity)),
-        *_exprs(_market_columns()),
-        *_exprs([("'NA'", c) for c in (
-            "Market Line ID",
-            "Market Line Name",
-            "Market Line",
-            "Market Line Favourite",
-            "Market Line Type",
-        )]),
-        *_exprs(_selection_columns("sel")),
-        *_exprs([(updated_b, "Market Updated")]),
-    )
-
-    out = a_rows.unionByName(b_rows)
-    return out.select(*SHEET_COLUMNS)

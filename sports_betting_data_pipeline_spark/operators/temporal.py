@@ -1,5 +1,5 @@
 """Temporal kit: the reference's timestamp/timezone scalar transforms
-C1-C4 (SURVEY.md §2.6) as JVM-side column expressions.
+C1-C4 (SURVEY.md §2.6) as JVM-side expressions.
 
 Reference semantics being re-expressed:
 
@@ -18,8 +18,8 @@ so the last µs digit can round); Spark timestamps are µs so we use
 EXACT integer division ns div 1000 — deterministic truncation, matching
 DuckDB's ns→µs behavior.
 
-All functions return Column expressions (whole-stage-codegen friendly;
-no Python UDFs).
+``parse_iso_utc`` returns a Column; the renderings return Spark SQL
+text (whole-stage-codegen friendly; no Python UDFs).
 
 SESSION-TIMEZONE CONTRACT: every rendering assumes
 ``spark.sql.session.timeZone = UTC`` (``date_format`` renders in the
@@ -28,10 +28,10 @@ engine pins it everywhere a session passes through its hands —
 ``session.get_spark``, ``io._ensure_engine_confs`` (i.e. every
 ``load_table``), ``streaming.read_events_stream``, and
 ``flatten.flatten_sheet`` — so catalog queries cannot see a non-UTC
-session; callers composing these Columns over NON-engine DataFrames
-must pin the conf themselves.
+session; callers composing these expressions over NON-engine
+DataFrames must pin the conf themselves.
 
-Known bound: ``utc_offset_string`` renders ``±HH:MM`` — pre-1883 LMT
+Known bound: the offset (``_offset_sql``) renders ``±HH:MM`` — pre-1883 LMT
 offsets with a seconds component (e.g. America/New_York −04:56:02)
 truncate to minutes where Python ``str()`` would include seconds. No
 reachable input (betting events, modern epochs) has a sub-minute
@@ -51,77 +51,13 @@ def parse_iso_utc(col: Column | str) -> Column:
     return F.to_timestamp(col, ISO_Z_FORMAT)
 
 
-def ns_epoch_to_timestamp(col_name: str) -> Column:
-    """C3/C4 parse step: epoch-nanosecond int64 → TimestampType.
-
-    Takes a column NAME because exact integer division (`div`) is
-    needed — ``col / 1000`` would route through double and round
-    ns-scale epochs.
-    """
-    return F.timestamp_micros(F.expr(f"({col_name}) div 1000"))
-
-
-def _fraction(local_ts: Column) -> Column:
-    """``.ffffff`` when the µs component is nonzero, else '' — matching
-    Python ``str(datetime)`` which omits a zero fraction and never trims
-    trailing zeros of a nonzero one."""
-    frac = F.date_format(local_ts, "SSSSSS")
-    return F.when(frac != "000000", F.concat(F.lit("."), frac)).otherwise(F.lit(""))
-
-
-def utc_offset_string(ts_utc: Column, tz: str) -> Column:
-    """``±HH:MM`` offset of ``tz`` at the instant ``ts_utc``.
-
-    ``date_format`` renders offsets of the SESSION zone only, so the
-    offset is computed arithmetically: from_utc_timestamp shifts the
-    wall-clock by exactly the zone offset, and the shift is recovered
-    by differencing epoch seconds. DST-correct per instant.
-    """
-    shifted = F.from_utc_timestamp(ts_utc, tz)
-    off = (F.unix_timestamp(shifted) - F.unix_timestamp(ts_utc)).cast("long")
-    sign = F.when(off < 0, F.lit("-")).otherwise(F.lit("+"))
-    abs_off = F.abs(off)
-    hh = F.lpad((abs_off / 3600).cast("long").cast("string"), 2, "0")
-    mm = F.lpad(F.pmod((abs_off / 60).cast("long"), F.lit(60)).cast("string"), 2, "0")
-    return F.concat(sign, hh, F.lit(":"), mm)
-
-
-def render_aware(ts_utc: Column, tz: str) -> Column:
-    """C1/C3 render: Python ``str()`` of an aware datetime in ``tz``:
-    ``yyyy-MM-dd HH:mm:ss[.ffffff]±HH:MM``. Null in → null out."""
-    local = F.from_utc_timestamp(ts_utc, tz)
-    rendered = F.concat(
-        F.date_format(local, "yyyy-MM-dd HH:mm:ss"),
-        _fraction(local),
-        utc_offset_string(ts_utc, tz),
-    )
-    return F.when(ts_utc.isNotNull(), rendered)
-
-
-def render_naive(ts: Column) -> Column:
-    """C4 render: Python ``str()`` of a naive datetime —
-    ``yyyy-MM-dd HH:mm:ss[.ffffff]``, no offset suffix."""
-    rendered = F.concat(F.date_format(ts, "yyyy-MM-dd HH:mm:ss"), _fraction(ts))
-    return F.when(ts.isNotNull(), rendered)
-
-
-def iso_to_eastern_string(col: Column | str, tz: str = "America/New_York") -> Column:
-    """C1 end-to-end: ISO-Z string → tz-aware rendered string."""
-    return render_aware(parse_iso_utc(col), tz)
-
-
-def ns_epoch_to_eastern_string(col_name: str, tz: str = "US/Eastern") -> Column:
-    """C3 end-to-end: epoch-ns int → tz-aware rendered string."""
-    return render_aware(ns_epoch_to_timestamp(col_name), tz)
-
-
-# --- SQL-text forms (server-parsed fast path) ------------------------------
-# The C1/C3/C4 render chains are ~25 Column ops each and flatten_sheet
-# builds them 4x per call — ~0.25 s of pure Py4J construction (r6
-# profiling). These emit the SAME expression trees as the Column
-# builders above (subtree duplication per reference and all), parsed
-# in one gateway call. The Column forms stay for composed arguments
-# and tests; a property test pins string ≡ Column bit-identical.
+# --- SQL-text renderings ----------------------------------------------------
+# The C1/C3/C4 render chains are ~25 expression nodes each; built as
+# Column operators they cost one Py4J round trip per node (~0.25 s of
+# construction per flatten_sheet call, r6 profiling). As SQL text they
+# ride inside the caller's one selectExpr and are parsed server-side.
+# A property test pins every rendering to Python's zoneinfo str(),
+# µs-exact.
 
 ISO_Z_FORMAT_SQL = '"yyyy-MM-dd\'T\'HH:mm:ss\'Z\'"'
 
@@ -131,19 +67,27 @@ def parse_iso_utc_sql(col: str) -> str:
 
 
 def ns_epoch_to_timestamp_sql(col: str) -> str:
+    """C3/C4 parse step: epoch-ns int64 → TimestampType, by exact integer
+    division (``/ 1000`` would route through double and round)."""
     return f"timestamp_micros(({col}) div 1000)"
 
 
 def _fraction_sql(local: str) -> str:
+    """``.ffffff`` when the µs component is nonzero, else '' — Python
+    ``str(datetime)`` omits a zero fraction and never trims a nonzero one."""
     frac = f"date_format({local}, 'SSSSSS')"
     return f"CASE WHEN {frac} != '000000' THEN concat('.', {frac}) ELSE '' END"
 
 
 def _offset_sql(ts: str, tz: str) -> str:
-    off = (
-        f"CAST(unix_timestamp(from_utc_timestamp({ts}, '{tz}')) "
-        f"- unix_timestamp({ts}) AS BIGINT)"
-    )
+    """``±HH:MM`` offset of ``tz`` at the instant ``ts``. ``date_format``
+    renders the SESSION zone's offset only, so the offset is the shift
+    from_utc_timestamp applies, recovered by differencing epoch
+    microseconds (DST-correct per instant). Not epoch seconds:
+    ``unix_timestamp`` truncates toward zero, so a fractional instant
+    whose local wall clock falls before 1970 came out a second short
+    (``-04:59``)."""
+    off = f"((unix_micros(from_utc_timestamp({ts}, '{tz}')) - unix_micros({ts})) div 1000000)"
     sign = f"CASE WHEN {off} < 0 THEN '-' ELSE '+' END"
     hh = f"lpad(CAST(CAST(abs({off}) / 3600 AS BIGINT) AS STRING), 2, '0')"
     mm = (
@@ -154,6 +98,8 @@ def _offset_sql(ts: str, tz: str) -> str:
 
 
 def render_aware_sql(ts: str, tz: str) -> str:
+    """C1/C3 render: Python ``str()`` of an aware datetime in ``tz``,
+    ``yyyy-MM-dd HH:mm:ss[.ffffff]±HH:MM``. Null in → null out."""
     local = f"from_utc_timestamp({ts}, '{tz}')"
     rendered = (
         f"concat(date_format({local}, 'yyyy-MM-dd HH:mm:ss'), "
@@ -163,6 +109,7 @@ def render_aware_sql(ts: str, tz: str) -> str:
 
 
 def render_naive_sql(ts: str) -> str:
+    """C4 render: Python ``str()`` of a naive datetime, no offset."""
     rendered = (
         f"concat(date_format({ts}, 'yyyy-MM-dd HH:mm:ss'), "
         f"{_fraction_sql(ts)})"
@@ -181,7 +128,3 @@ def ns_epoch_to_eastern_sql(col: str, tz: str = "US/Eastern") -> str:
 def ns_epoch_to_naive_sql(col: str) -> str:
     return render_naive_sql(ns_epoch_to_timestamp_sql(col))
 
-
-def ns_epoch_to_naive_string(col_name: str) -> Column:
-    """C4 end-to-end: epoch-ns int → naive UTC rendered string."""
-    return render_naive(ns_epoch_to_timestamp(col_name))

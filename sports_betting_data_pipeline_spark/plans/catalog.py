@@ -14,7 +14,8 @@ Conventions that keep the oracle comparison tight:
   oracle SQL so schemas line up with Spark's LongType.
 - Timezone-sensitive renderings are kept OUT of oracle queries (the
   oracle session timezone is not ours to control); C1-C4 fidelity is
-  pinned by unit tests instead (tests/test_temporal.py).
+  pinned by unit tests instead (tests/test_flatten.py and
+  tests/test_properties.py::test_temporal_renderings_match_zoneinfo).
 
 The registry is populated by importing the query modules at the bottom
 of this file.

@@ -132,7 +132,7 @@ def _p01_oracle_sql() -> str:
 def p01_flatten_sheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1-P4 centerpiece: nested betting tree → 25-col sheet table.
 
-    Hash-checked driver oracle: the two-branch flatten re-derived in
+    Hash-checked driver oracle: the reference's two-branch flatten re-derived in
     DuckDB UNNEST SQL over the same JSON-literal tree (cell-identical,
     see _p01_oracle_sql). Both fidelity modes additionally pinned in
     tests/test_flatten.py goldens.

@@ -3,7 +3,7 @@
 Timezone-SENSITIVE renderings (America/New_York, US/Eastern) are
 deliberately absent here — the oracle session's timezone is not ours to
 pin, so those are verified cell-exact by tests/test_flatten.py and
-tests/test_temporal.py. These queries cover the timezone-NEUTRAL
+tests/test_properties.py::test_temporal_renderings_match_zoneinfo. These queries cover the timezone-NEUTRAL
 surface: ISO-Z parse/format roundtrips, epoch extraction, calendar
 parts, and time bucketing.
 """

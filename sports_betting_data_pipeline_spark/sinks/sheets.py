@@ -32,7 +32,6 @@ import uuid
 from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
 
 
 def _raw(value: object) -> str:
@@ -69,9 +68,8 @@ def sheet_append(df: DataFrame, spool_dir: str, sheet: str) -> list[str]:
     target = os.path.join(spool_dir, sheet)
     os.makedirs(target, exist_ok=True)
     staging = os.path.join(target, f".staging-{uuid.uuid4().hex}")
-    as_text = df.select(
-        [F.col(f"`{c.replace('`', '``')}`").cast("string").alias(c) for c in df.columns]
-    )
+    quoted = (f"`{c.replace('`', '``')}`" for c in df.columns)
+    as_text = df.selectExpr(*(f"CAST({q} AS STRING) AS {q}" for q in quoted))
     try:
         as_text.write.csv(
             staging,

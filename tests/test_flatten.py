@@ -10,13 +10,17 @@ row-for-row. Pins:
 - favourite null -> "NA"; every other absent field -> "";
 - aware-string rendering incl. DST offsets and the ".ffffff" fraction;
 - fidelity=True reproduces the reference's branch-B raw-scheduled (C2)
-  and naive-local (C4) renderings.
+  and naive-local (C4) renderings;
+- NULL and empty arrays and elements at every level unnest as
+  ``explode`` does, and the operator plans as one pass.
 """
 
 from __future__ import annotations
 
 import datetime
 from zoneinfo import ZoneInfo
+
+import pytest
 
 from sports_betting_data_pipeline_spark.fixtures import betting_tree_df
 from sports_betting_data_pipeline_spark.operators.flatten import flatten_sheet
@@ -134,3 +138,130 @@ def test_flatten_row_count_and_all_strings(spark):
     out = flatten_sheet(betting_tree_df(spark))
     assert out.count() == 7
     assert all(f.dataType.typeName() == "string" for f in out.schema.fields)
+
+
+# --- Edge cases of the unnest (null and empty at every level) --------------
+# One event per case, so a wrong row names its case by its Event ID.
+
+EDGE_UPDATED = NS_M1
+EDGE_SCHEDULED = "2024-01-15T18:30:00Z"
+
+
+def _edge_market(mid: str, market_lines=None, selections=None) -> dict:
+    return {
+        "id": mid,
+        "name": mid.upper(),
+        "type": "moneyline",
+        "status": "open",
+        "updated_at": EDGE_UPDATED,
+        "market_lines": market_lines,
+        "selections": selections,
+    }
+
+
+def _edge_line(selections) -> dict:
+    return {
+        "id": "ml",
+        "name": "ML",
+        "line": -2.5,
+        "favourite": None,
+        "type": "spread",
+        "selections": selections,
+    }
+
+
+def _edge_sel(line_id: str) -> dict:
+    return {
+        "line_id": line_id,
+        "display_name": line_id.lower(),
+        "name": line_id,
+        "odds": 120,
+        "stake": None,
+        "value": 2.2,
+    }
+
+
+def edge_events() -> list[dict]:
+    a_sel, b_sel = _edge_sel("A1"), _edge_sel("B1")
+    markets = {
+        1: None,  # null markets
+        2: [None],  # null market
+        3: [_edge_market("m3", market_lines=[None])],  # null market line
+        4: [_edge_market("m4", market_lines=[_edge_line(None)])],  # null selections
+        # empty market_lines is branch A: the market's selections are not read
+        5: [_edge_market("m5", market_lines=[], selections=[[b_sel]])],
+        6: [_edge_market("m6", market_lines=[_edge_line([None, [a_sel]])])],  # A: null group
+        7: [_edge_market("m7", market_lines=[_edge_line([[]])])],  # A: empty group
+        8: [_edge_market("m8")],  # B: null selections
+        9: [_edge_market("m9", selections=[None, [], [b_sel]])],  # B: null, empty group
+        10: [_edge_market("m10", selections=[[None, b_sel]])],  # B: null selection
+        # the rows of a market are not lost to a null sibling at any level
+        11: [None, _edge_market("m11", market_lines=[None, _edge_line([[a_sel]])])],
+    }
+    return [
+        {
+            "event_id": eid,
+            "name": f"e{eid}",
+            "display_name": f"Event {eid}",
+            "scheduled": EDGE_SCHEDULED,
+            "status": "open",
+            "competitors": [
+                {"display_name": "Home", "abbreviation": "HOM", "side": "home"},
+                {"display_name": "Away", "abbreviation": "AWY", "side": "away"},
+            ],
+            "markets": ms,
+        }
+        for eid, ms in markets.items()
+    ]
+
+
+def edge_expected(fidelity: bool) -> list[list[str]]:
+    def event(eid: int, branch_b: bool) -> list[str]:
+        sched = EDGE_SCHEDULED if fidelity and branch_b else iso_to_ny(EDGE_SCHEDULED)
+        return [str(eid), sched, f"Event {eid}", "Home", "HOM", "home", "Away", "AWY", "away"]
+
+    def market(mid: str) -> list[str]:
+        return [mid, mid.upper(), "moneyline", "open"]
+
+    line = ["ml", "ML", "-2.5", "NA", "spread"]
+    upd_a = ns_to_eastern(EDGE_UPDATED)
+    upd_b = ns_to_naive_utc(EDGE_UPDATED) if fidelity else upd_a
+    sel_a = ["A1", "a1", "120", "open", "", "2.2", upd_a]
+    sel_b = ["B1", "b1", "120", "open", "", "2.2", upd_b]
+    empty_a = ["", "", "", "open", "", "", upd_a]
+    empty_b = ["", "", "", "open", "", "", upd_b]
+    return [
+        event(6, False) + market("m6") + line + empty_a,
+        event(6, False) + market("m6") + line + sel_a,
+        event(7, False) + market("m7") + line + empty_a,
+        event(9, True) + market("m9") + ["NA"] * 5 + sel_b,
+        event(10, True) + market("m10") + ["NA"] * 5 + empty_b,
+        event(10, True) + market("m10") + ["NA"] * 5 + sel_b,
+        event(11, False) + market("m11") + line + sel_a,
+    ]
+
+
+@pytest.mark.parametrize("fidelity", [False, True])
+def test_flatten_null_and_empty_levels(spark, fidelity):
+    from sports_betting_data_pipeline_spark.schemas import SPORT_EVENT
+    from sports_betting_data_pipeline_spark.session import local_frame
+
+    events = local_frame(spark, edge_events(), SPORT_EVENT)
+    actual = _collect_sorted(flatten_sheet(events, fidelity=fidelity))
+    expected = sorted(edge_expected(fidelity))
+    assert actual == expected, f"\nactual={actual}\nexpected={expected}"
+
+
+def _plan_nodes(df) -> list[str]:
+    tree = df._jdf.queryExecution().optimizedPlan().treeString()
+    return [ln.lstrip(" :+-").split(" ", 1)[0] for ln in tree.splitlines()]
+
+
+@pytest.mark.parametrize("fidelity", [False, True])
+def test_flatten_is_one_pass(spark, fidelity):
+    """Both reference branches come out of one generator over one scan:
+    a second explode branch doubles the scans, tasks and sheet parts."""
+    nodes = _plan_nodes(flatten_sheet(betting_tree_df(spark), fidelity=fidelity))
+    assert "Union" not in nodes, nodes
+    assert nodes.count("Generate") == 1, nodes
+    assert nodes.count("LocalRelation") == 1, nodes

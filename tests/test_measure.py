@@ -1,10 +1,12 @@
 """scripts/measure.py end to end: the last stdout line is its JSON
-result, and construction jobs are counted per query."""
+result, construction jobs are counted per query, and ``--plans``
+writes the same files on every run of one commit."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -14,20 +16,30 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _MEASURE = os.path.join(_REPO, "scripts", "measure.py")
 
 
-def test_measure_smoke_phase_split_and_construction_jobs(sf_dir, tmp_path):
-    if not os.path.isdir(sf_dir):
-        pytest.skip("test fixture not present")
+# co01 and j06 are AQE queries whose executed plan numbers stages and
+# nodes in completion order: two runs used to write different files
+_PLAN_QUERIES = ("q01_pricing_summary", "g01_nation_pagerank",
+                 "co01_cohort_retention", "j06_bloom_prefilter_join")
+
+
+def _measure(sf_dir: str, plans_dir, *queries: str) -> dict:
     proc = subprocess.run(
         [sys.executable, _MEASURE, "--rounds", "1", "--sf-dir", sf_dir,
-         "--plans", str(tmp_path), "q01_pricing_summary", "g01_nation_pagerank"],
+         "--plans", str(plans_dir), *queries],
         capture_output=True, text=True, timeout=600,
         env=dict(os.environ, SPARK_GRAFT_CPUS="4"),
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
-    result = json.loads(lines[-1])
+    return json.loads(lines[-1])
+
+
+def test_measure_smoke_phase_split_and_construction_jobs(sf_dir, tmp_path):
+    if not os.path.isdir(sf_dir):
+        pytest.skip("test fixture not present")
+    result = _measure(sf_dir, tmp_path / "a", *_PLAN_QUERIES)
     rows = {r["query"]: r for r in result["results"]}
-    assert set(rows) == {"q01_pricing_summary", "g01_nation_pagerank"}
+    assert set(rows) == set(_PLAN_QUERIES)
     for row in rows.values():
         [run] = row["runs"]
         assert {"construct_s", "plan_s", "exec_s"} <= set(run)
@@ -37,8 +49,14 @@ def test_measure_smoke_phase_split_and_construction_jobs(sf_dir, tmp_path):
     assert rows["g01_nation_pagerank"]["runs"][0]["construct"]["jobs"] > 0
     assert rows["q01_pricing_summary"]["runs"][0]["construct"]["jobs"] == 0
     tag = os.path.basename(os.path.normpath(sf_dir))
-    assert sorted(os.listdir(tmp_path)) == [
-        f"g01_nation_pagerank@{tag}.txt", f"q01_pricing_summary@{tag}.txt"]
+    written = sorted(os.listdir(tmp_path / "a"))
+    assert written == sorted(f"{q}@{tag}.txt" for q in _PLAN_QUERIES)
+    # a second run of the same commit writes the same plan files
+    _measure(sf_dir, tmp_path / "b", *_PLAN_QUERIES)
+    for name in written:
+        first = (tmp_path / "a" / name).read_text()
+        assert "== Physical Plan ==" in first and not re.search(r"#\d", first)
+        assert (tmp_path / "b" / name).read_text() == first, name
 
 
 def test_measure_rejects_unknown_query_before_spark_starts():

@@ -9,7 +9,7 @@ import datetime
 
 import pytest
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -749,38 +749,41 @@ def test_text_string_fast_paths_are_bit_identical(spark, text, k):
         st.integers(min_value=0, max_value=4_102_444_800_000_000_000),
     )
 )
-def test_temporal_sql_forms_match_column_forms(spark, ns):
-    """The C1/C3/C4 render chains' SQL-text forms (flatten_sheet's
-    construction fast path) must stay bit-identical to the Column
-    builders — across DST boundaries, µs fractions, and null inputs."""
+# 1970-01-01 00:00:00.000001 UTC: its New York wall clock is pre-epoch,
+# where truncating epoch seconds once rendered the offset as -04:59
+@example(1_000)
+def test_temporal_renderings_match_zoneinfo(spark, ns):
+    """The C1/C3/C4 SQL renderings (flatten_sheet's timestamp cells)
+    equal Python's ``str()`` of the zoneinfo datetime, µs-exact — across
+    DST boundaries, µs fractions, and null inputs."""
+    from zoneinfo import ZoneInfo
+
     from sports_betting_data_pipeline_spark.operators.temporal import (
         iso_to_eastern_sql,
-        iso_to_eastern_string,
         ns_epoch_to_eastern_sql,
-        ns_epoch_to_eastern_string,
         ns_epoch_to_naive_sql,
-        ns_epoch_to_naive_string,
     )
 
-    iso = (
-        None
-        if ns is None
-        else __import__("datetime")
-        .datetime.utcfromtimestamp((ns // 1_000_000_000) % 4_102_444_800)
-        .strftime("%Y-%m-%dT%H:%M:%SZ")
-    )
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    if ns is None:
+        iso = None
+        want = (None, None, None)
+    else:
+        utc = epoch + datetime.timedelta(microseconds=ns // 1000)
+        iso_utc = epoch + datetime.timedelta(seconds=(ns // 1_000_000_000) % 4_102_444_800)
+        iso = iso_utc.strftime("%Y-%m-%dT%H:%M:%SZ")
+        want = (
+            str(utc.astimezone(ZoneInfo("US/Eastern"))),
+            str(utc.replace(tzinfo=None)),
+            str(iso_utc.astimezone(ZoneInfo("America/New_York"))),
+        )
     df = spark.createDataFrame([(ns, iso)], "ns: long, iso: string")
-    row = df.select(
-        F.expr(ns_epoch_to_eastern_sql("ns")).alias("e_s"),
-        ns_epoch_to_eastern_string("ns").alias("e_c"),
-        F.expr(ns_epoch_to_naive_sql("ns")).alias("n_s"),
-        ns_epoch_to_naive_string("ns").alias("n_c"),
-        F.expr(iso_to_eastern_sql("iso")).alias("i_s"),
-        iso_to_eastern_string(F.col("iso")).alias("i_c"),
+    row = df.selectExpr(
+        ns_epoch_to_eastern_sql("ns"),
+        ns_epoch_to_naive_sql("ns"),
+        iso_to_eastern_sql("iso"),
     ).collect()[0]
-    assert row["e_s"] == row["e_c"], ns
-    assert row["n_s"] == row["n_c"], ns
-    assert row["i_s"] == row["i_c"], (ns, iso)
+    assert tuple(row) == want, (ns, iso)
 
 
 @settings(
