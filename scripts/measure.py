@@ -16,9 +16,11 @@ value, then one JSON line with every run.
 
 ``--plans DIR`` writes each query's optimized logical plan and initial
 physical plan, read on its first run between planning and execution,
-to DIR/<query>@<input dir name>.txt with expression ids (``#12``) and
-exchange ``plan_id=`` masked, so two runs of one commit write the same
-file. (The plan AQE settles on after execution carries stage, RDD and
+to DIR/<query>@<input dir name>.txt with expression ids (``#12``),
+exchange ``plan_id=`` and lambda variable names (``lambda x_12``,
+``lambda t``) masked, so two runs of one commit write the same file,
+and a lambda built through Column operators matches its SQL-text
+spelling. (The plan AQE settles on after execution carries stage, RDD and
 node ids that follow completion order, and is not written.)
 """
 
@@ -52,14 +54,22 @@ STAGE_SUMS = {
     "spill_bytes": ("memoryBytesSpilled", "diskBytesSpilled"),
 }
 RUN_IDS = re.compile(r"(#|plan_id=)\d+")
+# PySpark names a Column-built lambda's variables from a process-global
+# counter (x_12), SQL text keeps its own names (t)
+LAMBDA_VARS = re.compile(r"\blambda [A-Za-z_]\w*")
+
+
+def mask_run_ids(text: str) -> str:
+    """``text`` with expression ids, exchange plan ids and lambda
+    variable names masked."""
+    return LAMBDA_VARS.sub("lambda _", RUN_IDS.sub(r"\1", text))
 
 
 def plan_text(qe) -> str:
     """The optimized logical and the physical plan of a planned, not yet
     executed QueryExecution, run-specific ids masked."""
-    text = (f"== Optimized Logical Plan ==\n{qe.optimizedPlan()}\n\n"
-            f"== Physical Plan ==\n{qe.executedPlan()}\n")
-    return RUN_IDS.sub(r"\1", text)
+    return mask_run_ids(f"== Optimized Logical Plan ==\n{qe.optimizedPlan()}\n\n"
+                        f"== Physical Plan ==\n{qe.executedPlan()}\n")
 
 
 def run_once(spark, name: str, sf_dir: str, group: str, keep_plan: bool):

@@ -33,11 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sports_betting_data_pipeline_spark.functions.text import (
-    shingles,
-    shingles_from_tokens,
-    ws_tokens,
-)
+from sports_betting_data_pipeline_spark.functions.text import shingles, ws_tokens
+from sports_betting_data_pipeline_spark.session import qname
 
 
 def decontaminate_hits(
@@ -46,7 +43,6 @@ def decontaminate_hits(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    tokens_col: str | None = None,
 ) -> DataFrame:
     """Eval-set contamination detection (the n-gram-overlap rule used
     for pretraining decontamination): a corpus doc is contaminated if
@@ -56,20 +52,12 @@ def decontaminate_hits(
     n_bench_hits = how many DISTINCT benchmark docs overlap. Anti-join
     the corpus against this to get the clean set.
 
-    Pass ``tokens_col`` (a precomputed ``ws_tokens(text)`` array on
-    BOTH inputs) to skip re-tokenizing: composed pipelines (pl02)
-    cache one token base and feed every stage from it; shingle output
-    is identical (see :func:`text.shingles_from_tokens`).
-
     Scale: explode both sides to (shingle, id), equi-join on shingle,
     count distinct benchmark ids per corpus doc. The benchmark side is
     small (an eval suite); the shuffle carries only (shingle, id)
     pairs. Never quadratic.
     """
-    if tokens_col is not None:
-        sh = shingles_from_tokens(F.col(tokens_col), k)
-    else:
-        sh = shingles(F.col(text_col), k)
+    sh = shingles(qname(text_col), k)
     # No dropDuplicates on either exploded side: shingles() is
     # array_distinct per doc, so (id, shingle) rows are already unique
     # — the two dedup shuffles removed here were full-table no-ops
@@ -127,7 +115,7 @@ def pack_sequences(
     count_expr = (
         F.col(n_tokens_col).cast("long")
         if n_tokens_col
-        else F.size(ws_tokens(F.col(text_col))).cast("long")
+        else F.size(ws_tokens(qname(text_col))).cast("long")
     )
     # Text path: the cheap rlike(\S) predicate replaces
     # n_tokens > 0 on the derived count (the _minhash_base r11
@@ -166,7 +154,6 @@ def chunk_dedup_stats(
     chunk_tokens: int = 20,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tokens_col: str | None = None,
 ) -> DataFrame:
     """Repeated-chunk exact dedup (the line/paragraph-level dedup of
     MassiveText/RefinedWeb, adapted to fixed windows because the
@@ -187,27 +174,15 @@ def chunk_dedup_stats(
     doc. The (hash, first) table is the persistable chunk index (same
     shape as the l28 fingerprint store). Never quadratic.
     """
-    # tokens_col: consume a precomputed ws_tokens array instead of
-    # re-tokenizing (pl02's shared token base; chunks are built from
-    # the raw — not lowered — tokens either way).
-    toks = (
-        F.col(tokens_col) if tokens_col is not None else ws_tokens(F.col(text_col))
+    # Chunks are built from the raw — not lowered — tokens. Token-less
+    # docs are dropped with the cheap rlike(\S) text predicate instead
+    # of size(_toks) > 0 — the derived-column filter is substituted
+    # through the projection by predicate pushdown and re-tokenizes
+    # every doc at the scan (the _minhash_base r11 lesson; exactly
+    # equivalent: >= 1 ws-token iff one non-\s char).
+    base = docs.filter(F.col(text_col).rlike(r"\S")).select(
+        F.col(id_col).alias("_id"), ws_tokens(qname(text_col)).alias("_toks")
     )
-    # With the default text tokenizer, drop token-less docs with the
-    # cheap rlike(\S) text predicate instead of size(_toks) > 0 — the
-    # derived-column filter is substituted through the projection by
-    # predicate pushdown and re-tokenizes every doc at the scan (the
-    # _minhash_base r11 lesson; exactly equivalent: >= 1 ws-token iff
-    # one non-\s char). A caller-precomputed tokens_col is a stored
-    # column, so size() on it is already cheap.
-    if tokens_col is None:
-        base = docs.filter(F.col(text_col).rlike(r"\S")).select(
-            F.col(id_col).alias("_id"), toks.alias("_toks")
-        )
-    else:
-        base = docs.select(
-            F.col(id_col).alias("_id"), toks.alias("_toks")
-        ).filter(F.size("_toks") > 0)
     n_chunks = F.ceil(F.size("_toks") / F.lit(chunk_tokens)).cast("long")
     inst = base.select(
         "_id",
@@ -466,10 +441,11 @@ def token_budget_selection(
         ws_token_count,
     )
 
+    text = qname(text_col)
     scored = docs.select(
         F.col(id_col),
-        F.round(quality_score(F.col(text_col)), 6).alias("quality"),
-        ws_token_count(F.col(text_col)).alias("n_tokens"),
+        F.round(quality_score(text), 6).alias("quality"),
+        ws_token_count(text).alias("n_tokens"),
     )
     q_agg = scored.groupBy("quality").agg(F.sum("n_tokens").alias("_q_tokens"))
     wq = Window.orderBy(F.col("quality").desc()).rowsBetween(

@@ -27,11 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sports_betting_data_pipeline_spark.functions.text import (
-    _qname as _sql_qname,
-    shingles,
-    shingles_sql,
-)
+from sports_betting_data_pipeline_spark.functions.text import shingles, shingles_sql
+from sports_betting_data_pipeline_spark.session import qname
 
 
 # ---------------------------------------------------------------------------
@@ -105,19 +102,19 @@ def ngram_jaccard_pairs(
     # the CC-clustering consumers; at 100 TB the same argument holds —
     # caching the wide intermediate costs more storage/IO than the
     # narrow recompute).
-    # Server-parsed (one Py4J call; identical tree — the dot/cosine
-    # fast-path pattern): shingling + the optional payload hash.
+    # One server-parsed SQL text (one Py4J call): shingling + the
+    # optional payload hash.
     if hashed:
         # xxhash64 is injective-in-practice per the bound above; the
         # transform keeps array_distinct's dedup (distinct strings map
         # to distinct longs absent a collision), preserving the
         # distinct-element contract jaccard() relies on.
         sh_expr = F.expr(
-            f"transform({shingles_sql(_sql_qname(text_col), k)}, "
+            f"transform({shingles_sql(qname(text_col), k)}, "
             "s -> xxhash64(s))"
         )
     else:
-        sh_expr = shingles(text_col, k)
+        sh_expr = shingles(qname(text_col), k)
     sh = df.select(
         F.col(id_col).alias("_id"),
         sh_expr.alias("_sh"),
@@ -172,24 +169,11 @@ def ngram_jaccard_pairs(
 _LONG_MAX = (1 << 63) - 1
 
 
-def minhash_signature_sql(sh: str, num_hashes: int = 32, pre_hashed: bool = False) -> str:
-    """SQL text of :func:`minhash_signature_from_shingles` over an
-    arbitrary SQL expression ``sh`` — the server-parsed fast path
-    (4 construction lambdas -> one parse call, identical tree)."""
-    base = sh if pre_hashed else f"transform({sh}, s -> xxhash64(s))"
-    return (
-        f"aggregate({base}, "
-        f"array_repeat({_LONG_MAX}L, {num_hashes}), "
-        f"(acc, h) -> zip_with(acc, "
-        f"transform(sequence(0, {num_hashes - 1}), i -> xxhash64(h, i)), "
-        f"(a, b) -> least(a, b)))"
-    )
-
-
 def minhash_signature_from_shingles(
-    sh: Column | str, num_hashes: int = 32, pre_hashed: bool = False
+    sh: str, num_hashes: int = 32, pre_hashed: bool = False
 ) -> Column:
-    """MinHash signature from a shingle array, in ONE pass.
+    """MinHash signature from the shingle-array SQL expression ``sh``,
+    in ONE pass.
 
     Each shingle string is xxhash64'd exactly once; the ``num_hashes``
     per-seed hash family is derived by rehashing that fixed-width
@@ -207,21 +191,15 @@ def minhash_signature_from_shingles(
     xxhash64 application, just hoisted to the producer.
 
     Empty shingle sets yield an all-``_LONG_MAX`` signature (callers
-    filter on ``size(sh) > 0``). Pass a column NAME for the
-    server-parsed fast path.
+    filter on ``size(sh) > 0``).
     """
-    if isinstance(sh, str):
-        return F.expr(minhash_signature_sql(_sql_qname(sh), num_hashes, pre_hashed))
-    base_hashes = sh if pre_hashed else F.transform(sh, lambda s: F.xxhash64(s))
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.aggregate(
-        base_hashes,
-        F.array_repeat(F.lit(_LONG_MAX), num_hashes),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(seeds, lambda i: F.xxhash64(h, i)),
-            lambda a, b: F.least(a, b),
-        ),
+    base = sh if pre_hashed else f"transform({sh}, s -> xxhash64(s))"
+    return F.expr(
+        f"aggregate({base}, "
+        f"array_repeat({_LONG_MAX}L, {num_hashes}), "
+        f"(acc, h) -> zip_with(acc, "
+        f"transform(sequence(0, {num_hashes - 1}), i -> xxhash64(h, i)), "
+        f"(a, b) -> least(a, b)))"
     )
 
 
@@ -319,7 +297,7 @@ def _minhash_base(
         .select(
             F.col(id_col).alias("_id"),
             F.expr(
-                f"transform({shingles_sql(_sql_qname(text_col), k)}, "
+                f"transform({shingles_sql(qname(text_col), k)}, "
                 "s -> xxhash64(s))"
             ).alias("_sh"),
             *[F.col(c) for c in extra_cols],

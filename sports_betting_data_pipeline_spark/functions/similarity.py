@@ -24,11 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from sports_betting_data_pipeline_spark.session import local_frame
-
-
-def _qname(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
+from sports_betting_data_pipeline_spark.session import local_frame, qname
 
 
 # sqrt-N cell rule bounds. The floor keeps tiny fixtures on the same
@@ -83,47 +79,29 @@ def _l2_norm_sql(a: str) -> str:
     )
 
 
-# The string fast paths below exist because each higher-order lambda
-# costs ~13 ms of driver-side construction (r6 profiling; cosine() is
-# 6 lambdas), paid at PLAN BUILD time by every ANN/similarity query —
-# one server-parsed expression string is a single Py4J call and the
-# parsed tree is identical to the Column-operator form (lsh_bucket's
-# lesson), so results are bit-for-bit unchanged. Column arguments
-# keep the operator path (composed-expression callers, tests).
+# Each vector builder below is one SQL text parsed server-side by one
+# F.expr: a higher-order lambda built through Column operators costs
+# ~13 ms of driver-side construction (r6 profiling; cosine() is 6
+# lambdas), paid at PLAN BUILD time by every ANN/similarity query,
+# while the parsed text is a single Py4J call. Arguments are SQL
+# expression text: public functions quote their column-name
+# parameters once (session.qname).
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Double-precision dot product of two numeric arrays. Pass column
-    NAMES to get the server-parsed fast path (plan-construction cost)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(_qname(a), _qname(b)))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def dot(a: str, b: str) -> Column:
+    """Double-precision dot product of two numeric arrays."""
+    return F.expr(_dot_sql(a, b))
+
+
+def l2_norm(a: str) -> Column:
+    return F.expr(_l2_norm_sql(a))
+
+
+def cosine(a: str, b: str) -> Column:
+    return F.expr(
+        f"{_dot_sql(a, b)} / "
+        f"greatest({_l2_norm_sql(a)} * {_l2_norm_sql(b)}, 1.0E-12D)"
     )
-
-
-def l2_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(_l2_norm_sql(_qname(a)))
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        qa, qb = _qname(a), _qname(b)
-        return F.expr(
-            f"{_dot_sql(qa, qb)} / "
-            f"greatest({_l2_norm_sql(qa)} * {_l2_norm_sql(qb)}, 1.0E-12D)"
-        )
-    return dot(a, b) / F.greatest(l2_norm(a) * l2_norm(b), F.lit(1e-12))
 
 
 def brute_force_topk(
@@ -147,7 +125,7 @@ def brute_force_topk(
     ).select(
         F.col(query_id_col),
         F.col(id_col),
-        cosine(vec_col, query_vec_col).alias("cosine_sim"),
+        cosine(qname(vec_col), qname(query_vec_col)).alias("cosine_sim"),
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cosine_sim").desc(), F.col(id_col)
@@ -165,35 +143,20 @@ def _projection_literals(dim: int, bits: int, seed: int) -> list[list[float]]:
     return rng.standard_normal((bits, dim)).tolist()
 
 
-def lsh_bucket(vec_col: Column | str, planes: list[list[float]]) -> Column:
+def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
     """Sign-projection bucket id: bit i = (vec · plane_i) > 0.
 
-    Built as ONE SQL string parsed server-side when given a column
-    NAME: the Column-operator form is ~(bits × dim) Py4J round trips
-    (~1.1 s of driver time per lsh_topk construction at bits=8,
-    dim=64 — r6); `repr(float)` literals round-trip exactly, so the
-    parsed plan is bit-identical to the operator form. A Column
-    argument falls back to the operator path (test helper usage).
+    ONE SQL text parsed server-side: built through Column operators it
+    was ~(bits × dim) Py4J round trips (~1.1 s of driver time per
+    lsh_topk construction at bits=8, dim=64 — r6). `repr(float)`
+    literals round-trip exactly, so the planes are the seeded doubles
+    bit for bit.
     """
-    if isinstance(vec_col, str):
-        qv = _qname(vec_col)
-        terms = []
-        for i, plane in enumerate(planes):
-            arr = ",".join(f"{float(v)!r}D" for v in plane)
-            proj = (
-                f"aggregate(zip_with({qv}, array({arr}), "
-                "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                "0.0D, (acc, v) -> acc + v)"
-            )
-            terms.append(f"IF({proj} > 0, {1 << i}L, 0L)")
-        return F.expr("(" + " + ".join(terms) + ")")
-    bucket = F.lit(0).cast("long")
+    terms = []
     for i, plane in enumerate(planes):
-        proj = dot(vec_col, F.array(*[F.lit(float(v)) for v in plane]))
-        bucket = bucket + F.when(proj > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
+        arr = ",".join(f"{float(v)!r}D" for v in plane)
+        terms.append(f"IF({_dot_sql(vec, f'array({arr})')} > 0, {1 << i}L, 0L)")
+    return F.expr("(" + " + ".join(terms) + ")")
 
 
 def lsh_topk(
@@ -215,17 +178,16 @@ def lsh_topk(
     Output: (query_id, vec_id, cosine_sim, rank) within-bucket.
     """
     planes = _projection_literals(dim, bits, seed)
-    corpus_b = corpus.withColumn("_bucket", lsh_bucket(vec_col, planes))
-    queries_b = queries.withColumn(
-        "_bucket", lsh_bucket(query_vec_col, planes)
-    )
+    qv, qqv = qname(vec_col), qname(query_vec_col)
+    corpus_b = corpus.withColumn("_bucket", lsh_bucket(qv, planes))
+    queries_b = queries.withColumn("_bucket", lsh_bucket(qqv, planes))
     joined = corpus_b.join(
         F.broadcast(queries_b.select(query_id_col, query_vec_col, "_bucket")),
         on="_bucket",
     ).select(
         F.col(query_id_col),
         F.col(id_col),
-        cosine(vec_col, query_vec_col).alias("cosine_sim"),
+        cosine(qv, qqv).alias("cosine_sim"),
     )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cosine_sim").desc(), F.col(id_col)
@@ -481,14 +443,15 @@ def _nearest_cells(
     # ivfpq_topk, semdedup, l43's union form). Bit-identical to
     # cosine(): same dot fold, same row-norm × cent-norm operand
     # order, same greatest(..., 1e-12) guard.
-    src = src.withColumn("_nc_rnorm", l2_norm(df_vec))
+    qv = qname(df_vec)
+    src = src.withColumn("_nc_rnorm", l2_norm(qv))
     cents_n = cents.withColumn("_nc_cnorm", l2_norm("cv"))
     sims = src.crossJoin(F.broadcast(cents_n)).select(
         F.col(df_id),
         *([F.col(df_vec)] if keep_vec else []),
         F.col("cent_id"),
         (
-            dot(df_vec, "cv")
+            dot(qv, "cv")
             / F.greatest(
                 F.col("_nc_rnorm") * F.col("_nc_cnorm"), F.lit(1e-12)
             )
@@ -584,11 +547,12 @@ def ivf_topk(
     # oracle hashes are unchanged. The ranking window then shuffles
     # only narrow (query_id, id, cosine_sim) rows — vectors never ride
     # the top-k exchange.
+    qv, qqv = qname(vec_col), qname(query_vec_col)
     assigned = nearest_cells(corpus, id_col, vec_col, 1).withColumn(
-        "_cnorm", l2_norm(vec_col)
+        "_cnorm", l2_norm(qv)
     )
     probes = nearest_cells(queries, query_id_col, query_vec_col, nprobe).withColumn(
-        "_qnorm", l2_norm(query_vec_col)
+        "_qnorm", l2_norm(qqv)
     )
 
     # Scoring-join shape: the CORPUS side stays put and the probe
@@ -617,7 +581,7 @@ def ivf_topk(
         F.col(query_id_col),
         F.col(id_col),
         (
-            dot(vec_col, query_vec_col)
+            dot(qv, qqv)
             / F.greatest(F.col("_cnorm") * F.col("_qnorm"), F.lit(1e-12))
         ).alias("cosine_sim"),
     )
@@ -870,7 +834,7 @@ def _subspace_rows(
     operators are Py4J chatter at plan-construction time)."""
     structs = ", ".join(
         f"named_struct('s', {s}, 'subvec', "
-        f"slice(CAST(`{vec_col}` AS ARRAY<DOUBLE>), {s * dsub + 1}, {dsub}))"
+        f"slice(CAST({qname(vec_col)} AS ARRAY<DOUBLE>), {s * dsub + 1}, {dsub}))"
         for s in range(m)
     )
     return df.select(
@@ -1176,7 +1140,7 @@ def semdedup(
         # per-vector norm computed ONCE here: the pair stage below
         # evaluates O(sum |cluster|^2) comparisons, and recomputing
         # both norms per pair (cosine()) tripled its array work
-        .select("vec_id", "cent_id", vec_col, l2_norm(vec_col).alias("_n"))
+        .select("vec_id", "cent_id", vec_col, l2_norm(qname(vec_col)).alias("_n"))
         # both self-join sides read this — cached, the C-way
         # assignment runs once, not twice (catalog runner clearCache()s
         # per query; production persists the assignment as its staging

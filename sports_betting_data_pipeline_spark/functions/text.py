@@ -7,6 +7,12 @@ whole-stage codegen with zero Python in the hot path, embarrassingly
 parallel per partition (no shuffles except where a groupBy is the
 semantics).
 
+The token-based builders take their text as SQL expression text — a
+quoted column name (``session.qname``) or a composed expression such
+as ``"lower(text)"`` — and ``ws_tokens``/``shingles`` are that text
+parsed once server-side (``F.expr``): one Py4J call where a
+Column-operator lambda costs ~13 ms of driver-side construction each.
+
 Design notes per operator:
 - token counts: whitespace tokens and a BPE-ish regex tokenizer
   (`\\w+` runs or single non-space symbols) — the standard
@@ -26,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from sports_betting_data_pipeline_spark.session import qname
+
 # Marker words per language for the heuristic classifier. Precedence
 # (tie-break) order is the tuple order below.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -40,27 +48,18 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = ["the", "a", "an", "is", "are", "of", "and", "or", "to", "in"]
 
 
-def _qname(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
 def ws_tokens_sql(t: str) -> str:
-    """SQL text of :func:`ws_tokens` over an arbitrary SQL expression
-    ``t`` — the server-parsed fast path (see similarity.py's dot/cosine
-    note: every higher-order lambda costs ~13 ms of driver-side
-    construction; one parsed string is one Py4J call, identical tree)."""
+    """SQL text of :func:`ws_tokens` over the SQL expression ``t``."""
     return f"filter(split({t}, '\\\\s+'), t -> t != '')"
 
 
-def ws_tokens(text: Column | str) -> Column:
-    """Whitespace tokenization; drops empty tokens. Pass a column NAME
-    for the server-parsed fast path."""
-    if isinstance(text, str):
-        return F.expr(ws_tokens_sql(_qname(text)))
-    return F.filter(F.split(text, r"\s+"), lambda t: t != "")
+def ws_tokens(text: str) -> Column:
+    """Whitespace tokenization of the SQL expression ``text``; drops
+    empty tokens."""
+    return F.expr(ws_tokens_sql(text))
 
 
-def ws_token_count(text: Column) -> Column:
+def ws_token_count(text: str) -> Column:
     return F.size(ws_tokens(text)).cast("long")
 
 
@@ -77,20 +76,20 @@ def char_count(text: Column) -> Column:
     return F.length(text).cast("long")
 
 
-def uniq_token_ratio(text: Column) -> Column:
+def uniq_token_ratio(text: str) -> Column:
     """Distinct-token / token ratio — low values indicate boilerplate
     or repetition (a Gopher-style repetition filter feature)."""
     toks = ws_tokens(text)
     return F.size(F.array_distinct(toks)) / F.greatest(F.size(toks), F.lit(1))
 
 
-def stopword_ratio(text: Column) -> Column:
+def stopword_ratio(text: str) -> Column:
     toks = ws_tokens(text)
     hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(*STOPWORDS)))
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
-def mean_token_length(text: Column) -> Column:
+def mean_token_length(text: str) -> Column:
     toks = ws_tokens(text)
     total = F.aggregate(
         toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
@@ -98,10 +97,11 @@ def mean_token_length(text: Column) -> Column:
     return total / F.greatest(F.size(toks), F.lit(1))
 
 
-def quality_score_tokens(toks: Column) -> Column:
-    """:func:`quality_score` from a precomputed ``ws_tokens`` array —
-    the shared-tokenization path (pl02). Identical arithmetic, same
-    feature definitions; only the tokenize step is hoisted out."""
+def quality_score(text: str) -> Column:
+    """Bounded [0,1] quality heuristic combining pretraining-filter
+    features: enough-but-not-degenerate length, sane mean token length,
+    some stopword mass, low repetition."""
+    toks = ws_tokens(text)
     n = F.size(toks).cast("long")
     denom = F.greatest(F.size(toks), F.lit(1))
     len_ok = F.when((n >= 10) & (n <= 100000), F.lit(1.0)).otherwise(F.lit(0.0))
@@ -116,14 +116,7 @@ def quality_score_tokens(toks: Column) -> Column:
     return (len_ok + mtl_ok + sw_ok + uniq) / F.lit(4.0)
 
 
-def quality_score(text: Column) -> Column:
-    """Bounded [0,1] quality heuristic combining pretraining-filter
-    features: enough-but-not-degenerate length, sane mean token length,
-    some stopword mass, low repetition."""
-    return quality_score_tokens(ws_tokens(text))
-
-
-def lang_id(text: Column) -> Column:
+def lang_id(text: str) -> Column:
     """Marker-overlap language classifier with fixed tie precedence.
 
     Double let-binding via single-element transforms (the shingles
@@ -134,7 +127,7 @@ def lang_id(text: Column) -> Column:
     form re-ran the full tokenize pipeline inside every score
     reference (~10× per row: greatest + each when-condition)."""
     langs = list(LANG_MARKERS)
-    dtoks = F.array_distinct(ws_tokens(F.lower(text)))
+    dtoks = F.array_distinct(ws_tokens(f"lower({text})"))
 
     def decide(sc: Column) -> Column:
         best = F.greatest(*[sc[i] for i in range(len(langs))])
@@ -163,8 +156,7 @@ def lang_id(text: Column) -> Column:
 
 
 def shingles_sql(t: str, k: int = 3) -> str:
-    """SQL text of :func:`shingles` over an arbitrary SQL expression
-    ``t`` (same let-binding structure, same tree — one parse call)."""
+    """SQL text of :func:`shingles` over the SQL expression ``t``."""
     return (
         f"transform(array({ws_tokens_sql(f'lower({t})')}), "
         f"toks -> IF(toks IS NULL, NULL, "
@@ -175,54 +167,25 @@ def shingles_sql(t: str, k: int = 3) -> str:
     )
 
 
-def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
-    """:func:`shingles` from a precomputed ``ws_tokens`` array — the
-    shared-tokenization path for composed pipelines (pl02 caches ONE
-    token base and feeds every stage). Output is identical to
-    ``shingles(text, k)``: lowercasing never creates or destroys
-    whitespace, so ``ws_tokens(lower(text))`` equals a per-token
-    ``lower`` over ``ws_tokens(text)`` (pinned by test). Same
-    let-binding-through-transform trick as :func:`shingles` — the
-    per-index lambda must not re-evaluate the token pipeline."""
-    base = F.transform(toks, lambda t: F.lower(t))
-    return F.transform(F.array(base), lambda t: _build_shingles(t, k))[0]
+def shingles(text: str, k: int = 3) -> Column:
+    """Distinct k-word shingles (the MinHash/Jaccard input unit) of the
+    lowercased SQL expression ``text``: a sliding k-window over its
+    whitespace tokens (transform+slice), with the token-less edges
+    spelled out (both found by scripts/fuzz_oracle.py):
 
-
-def _build_shingles(toks: Column, k: int) -> Column:
-    """Sliding k-window over a LET-BOUND token array, with the two
-    token-less edges spelled out (both found by scripts/fuzz_oracle.py):
-
-    - NULL tokens → NULL shingles. ``greatest(NULL - k + 1, 1)`` would
-      otherwise resolve to 1 (greatest skips NULLs) and ``concat_ws``
-      over the NULL slice to '' — silently conflating NULL text with
-      empty text (nulls variant: l08 paired every NULL-text doc with
-      every empty one).
-    - EMPTY tokens (empty/whitespace-only text) → [] — an empty
-      shingle SET, which the size()>0 candidate filters exclude. The
-      greatest(n-k+1, 1) lower bound exists for 1..k-1-token docs
-      (their single full-token join IS their shingle); at n=0 it
-      minted a [''] singleton that paired all empty docs at Jaccard
-      1.0, which no DuckDB oracle fragment ever replicated (extremes
-      variant — the fragment's list ops give [] there).
-    """
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    built = F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    )
-    return F.when(n >= 1, built).otherwise(
-        F.when(toks.isNotNull(), F.array().cast("array<string>"))
-    )
-
-
-def shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles (the MinHash/Jaccard input unit).
-
-    Sliding window over whitespace tokens via transform+slice; text
-    shorter than k tokens yields its single full-token join; NULL
-    text yields NULL (see :func:`_build_shingles`). Pass a column
-    NAME for the server-parsed fast path (5 construction lambdas ->
-    one parse call).
+    - NULL text → NULL shingles (``IF(toks IS NULL, NULL, …)``).
+      ``greatest(NULL - k + 1, 1)`` would otherwise resolve to 1
+      (greatest skips NULLs) and ``concat_ws`` over the NULL slice to
+      '' — silently conflating NULL text with empty text (nulls
+      variant: l08 paired every NULL-text doc with every empty one).
+    - EMPTY/whitespace-only text → [] (``IF(size(toks) = 0, …)``) — an
+      empty shingle SET, which the size()>0 candidate filters exclude.
+      At n=0 the greatest(n-k+1, 1) lower bound minted a [''] singleton
+      that paired all empty docs at Jaccard 1.0, which no DuckDB
+      oracle fragment ever replicated (extremes variant — the
+      fragment's list ops give [] there).
+    - 1..k-1 tokens → one shingle, their full-token join (the
+      greatest(n-k+1, 1) lower bound).
 
     The token array is LET-BOUND through a single-element ``transform``
     before the sliding window: a lambda body re-evaluates every
@@ -231,11 +194,7 @@ def shingles(text: Column | str, k: int = 3) -> Column:
     re-run split+filter once per shingle (~tokens× redundant work —
     measured 3.4s -> 0.5s over 5000 docs at sf0.1).
     """
-    if isinstance(text, str):
-        return F.expr(shingles_sql(_qname(text), k))
-    return F.transform(
-        F.array(ws_tokens(F.lower(text))), lambda t: _build_shingles(t, k)
-    )[0]
+    return F.expr(shingles_sql(text, k))
 
 
 def unigram_surprisal(
@@ -262,7 +221,7 @@ def unigram_surprisal(
     from pyspark.sql import functions as F
 
     toks = docs.select(
-        F.col(id_col), F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("_w")
+        F.col(id_col), F.explode(ws_tokens(f"lower({qname(text_col)})")).alias("_w")
     )
     counts = toks.groupBy("_w").agg(F.count(F.lit(1)).alias("_c"))
     # N = sum of the per-word counts: one scalar off the (tiny)
@@ -312,7 +271,7 @@ def bm25_topk(
 
     terms = [t.lower() for t in query_terms]
     toks = docs.select(
-        F.col(id_col), F.explode(ws_tokens(F.lower(F.col(text_col)))).alias("_w")
+        F.col(id_col), F.explode(ws_tokens(f"lower({qname(text_col)})")).alias("_w")
     )
     lens = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("_len"))
     stats = lens.agg(
@@ -351,7 +310,7 @@ def bm25_topk(
     )
 
 
-def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
+def winnow_fingerprints(text: str, k: int = 3, w: int = 4) -> Column:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003): hash every k-token gram, slide a w-hash window over
     the gram sequence, and keep the minimum hash of each window — the
@@ -386,10 +345,10 @@ def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
         )
         return F.transform(F.array(h), over_hashes)[0]
 
-    return F.transform(F.array(ws_tokens(F.lower(text))), over_tokens)[0]
+    return F.transform(F.array(ws_tokens(f"lower({text})")), over_tokens)[0]
 
 
-def gopher_rules(text: Column) -> Column:
+def gopher_rules(text: str) -> Column:
     """Gopher-style (Rae et al. 2021, public) document quality rules,
     as a struct of per-rule pass booleans plus the composite keep.
 
@@ -454,4 +413,4 @@ def gopher_rules(text: Column) -> Column:
             F.array(grams), lambda g: over_grams(toks, n, g)
         )[0]
 
-    return F.transform(F.array(ws_tokens(F.lower(text))), over_tokens)[0]
+    return F.transform(F.array(ws_tokens(f"lower({text})")), over_tokens)[0]

@@ -160,16 +160,15 @@ def l01_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.pmod(F.col("doc_id"), F.lit(7)) == 0
     )
-    text = F.col("text")
     return docs.select(
         "doc_id",
         "n_chars",
-        char_count(text).alias("len_chars"),
-        ws_token_count(text).alias("n_tokens"),
-        bpe_ish_token_count(text).alias("n_bpe"),
-        F.round(mean_token_length(text), 6).alias("mean_tok_len"),
-        F.round(uniq_token_ratio(text), 6).alias("uniq_ratio"),
-        F.round(stopword_ratio(text), 6).alias("sw_ratio"),
+        char_count(F.col("text")).alias("len_chars"),
+        ws_token_count("text").alias("n_tokens"),
+        bpe_ish_token_count(F.col("text")).alias("n_bpe"),
+        F.round(mean_token_length("text"), 6).alias("mean_tok_len"),
+        F.round(uniq_token_ratio("text"), 6).alias("uniq_ratio"),
+        F.round(stopword_ratio("text"), 6).alias("sw_ratio"),
     )
 
 
@@ -190,7 +189,7 @@ def l02_word_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial counts; the limit compiles to TakeOrderedAndProject."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(ws_tokens(F.lower(F.col("text")))).alias("word"))
+        docs.select(F.explode(ws_tokens("lower(text)")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), "word")
@@ -231,7 +230,7 @@ def l03_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.select(
             F.col("lang").alias("lang_true"),
-            lang_id(F.col("text")).alias("lang_pred"),
+            lang_id("text").alias("lang_pred"),
         )
         .groupBy("lang_true", "lang_pred")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -269,7 +268,7 @@ def l04_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("doc_id"), F.lit(5)) == 0
     )
     return docs.select(
-        "doc_id", F.round(quality_score(F.col("text")), 6).alias("quality")
+        "doc_id", F.round(quality_score("text"), 6).alias("quality")
     )
 
 
@@ -299,7 +298,7 @@ def l05_prefix_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_to_string over a NULL/empty slice never does (fuzz_oracle
     nulls + extremes variants)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = ws_tokens(F.col("text"))
+    toks = ws_tokens("text")
     prefix = F.when(
         F.size(toks) >= 1, F.concat_ws(" ", F.slice(toks, 1, 2))
     )
@@ -362,7 +361,7 @@ def l07_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = docs.select(
         F.col("doc_id").alias("_id"),
         F.col("lang").alias("_blk"),
-        F.array_distinct(ws_tokens(F.lower(F.col("text")))).alias("_sh"),
+        F.array_distinct(ws_tokens("lower(text)")).alias("_sh"),
     )
     left = sh.select(
         F.col("_blk"), F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")
@@ -900,7 +899,7 @@ def l15_token_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     # predicate pushdown cannot substitute the tokenizer into the scan
     # filter (the _minhash_base r11 lesson; tokenize once, not twice)
     toks_df = docs.filter(F.col("text").rlike(r"\S")).select(
-        "doc_id", ws_tokens(F.col("text")).alias("_toks")
+        "doc_id", ws_tokens("text").alias("_toks")
     )
     st = toks_df.select(
         "doc_id",
@@ -1084,7 +1083,7 @@ def l18_bigram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stats = F.transform(
-        F.array(ws_tokens(F.lower(F.col("text")))), build
+        F.array(ws_tokens("lower(text)")), build
     )[0]
     return docs.select(
         "doc_id",
@@ -1153,14 +1152,14 @@ def pl01_pretraining_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     normed = docs.filter(F.col("text").rlike(r"\S")).select(
         "doc_id", norm.alias("norm")
     )
-    scored = normed.withColumn("q", quality_score(F.col("norm"))).filter(
+    scored = normed.withColumn("q", quality_score("norm")).filter(
         F.col("q") >= 0.75
     )
     deduped = exact_dedupe_canonical(
         scored.withColumn("fp", F.md5("norm")), key="doc_id", subset=["fp"]
     )
     toks = deduped.select(
-        "doc_id", ws_tokens(F.col("norm")).alias("_t")
+        "doc_id", ws_tokens("norm").alias("_t")
     ).withColumn("_n", F.size("_t"))
     st = toks.select(
         "doc_id",
@@ -1215,7 +1214,7 @@ def l19_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     tokens = docs.select(
-        "doc_id", F.explode(ws_tokens(F.lower(F.col("text")))).alias("term")
+        "doc_id", F.explode(ws_tokens("lower(text)")).alias("term")
     )
     tf = tokens.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     idf = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -1662,7 +1661,7 @@ def l29_source_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     base = docs.select(
         "source",
-        ws_token_count(F.col("text")).alias("_ntok"),
+        ws_token_count("text").alias("_ntok"),
         F.md5(norm).alias("_fp"),
     )
     g = base.groupBy("source").agg(
@@ -2104,8 +2103,7 @@ def pl02_corpus_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-tokenizing per stage (r7 interleaved A/B: 4.4 s vs 3.9 s cold
     # at sf0.1) — the cache materializes corpus-width token arrays and
     # the stages' real cost is their shingle/chunk joins, not the
-    # tokenize pass. The tokens_col/shingles_from_tokens seams remain
-    # (parity-pinned) for corpora where tokenization IS the bottleneck.
+    # tokenize pass.
     bench = docs.filter(F.pmod("doc_id", F.lit(97)) == 0)
     corpus = docs.filter(F.pmod("doc_id", F.lit(97)) != 0)
     hits = decontaminate_hits(corpus, bench, k=5)
@@ -2146,7 +2144,7 @@ def pl02_corpus_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan-only consumers still run the decontam pipeline's stages at
     # build time. The downstream plan hangs off the RDD leaves either way.
     good = (
-        deduped.filter(F.round(quality_score(F.col("text")), 6) >= 0.5)
+        deduped.filter(F.round(quality_score("text"), 6) >= 0.5)
         .select(
             "doc_id",
             "lang",
@@ -2413,7 +2411,7 @@ def l37_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     that branch and the word shuffle with it.
     """
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(F.explode(ws_tokens(F.lower(F.col("text")))).alias("word"))
+    tok = docs.select(F.explode(ws_tokens("lower(text)")).alias("word"))
     exact = tok.groupBy("word").agg(F.count(F.lit(1)).alias("exact_count"))
     hashed = exact.select(
         "word",
@@ -2573,7 +2571,7 @@ def l39_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic stays exact.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = ws_tokens(F.lower(F.col("text")))
+    toks = ws_tokens("lower(text)")
     out = (
         # rolling-hash folds are map-side CPU on a one-row-group
         # fixture scan — widen or they run on a single task (SCALE.md
@@ -2583,7 +2581,7 @@ def l39_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             (F.size(toks) - 2).cast("long").alias("n_kgrams"),
-            winnow_fingerprints(F.col("text"), k=3, w=4).alias("_fps"),
+            winnow_fingerprints("text", k=3, w=4).alias("_fps"),
         )
     )
     return out.select(
@@ -2767,7 +2765,7 @@ def l41_gopher_rule_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash-partitioning on the group key lets the final aggregate reuse
     # the exchange instead of adding one.
     r = widen_for_compute(docs).select(
-        "source", gopher_rules(F.col("text")).alias("r")
+        "source", gopher_rules("text").alias("r")
     ).repartition(F.col("source"))
     return r.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -3102,7 +3100,7 @@ def pl03_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, F.col("vec_id") == F.col("doc_id")
     ).select(
         F.col("doc_id").alias("id"),
-        shingles(F.lower(F.col("text")), 3).alias("sh"),
+        shingles("lower(text)", 3).alias("sh"),
         F.col("embedding").alias("v"),
         l2_norm("embedding").alias("_n"),
     )

@@ -225,3 +225,9 @@ def local_frame(
     else:
         table = to_arrow_schema(schema, prefers_large_types=large).empty_table()
     return spark.createDataFrame(table, schema=schema)
+
+
+def qname(name: str) -> str:
+    """The column ``name`` as a backtick-quoted SQL identifier, for
+    expression text that ``F.expr`` or ``selectExpr`` parses."""
+    return "`" + name.replace("`", "``") + "`"

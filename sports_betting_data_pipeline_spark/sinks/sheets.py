@@ -33,6 +33,8 @@ from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, Row
 
+from sports_betting_data_pipeline_spark.session import qname
+
 
 def _raw(value: object) -> str:
     """RAW value rendering (K1: valueInputOption='RAW'): empty string
@@ -68,8 +70,9 @@ def sheet_append(df: DataFrame, spool_dir: str, sheet: str) -> list[str]:
     target = os.path.join(spool_dir, sheet)
     os.makedirs(target, exist_ok=True)
     staging = os.path.join(target, f".staging-{uuid.uuid4().hex}")
-    quoted = (f"`{c.replace('`', '``')}`" for c in df.columns)
-    as_text = df.selectExpr(*(f"CAST({q} AS STRING) AS {q}" for q in quoted))
+    as_text = df.selectExpr(
+        *(f"CAST({q} AS STRING) AS {q}" for q in map(qname, df.columns))
+    )
     try:
         as_text.write.csv(
             staging,

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from sports_betting_data_pipeline_spark.functions.odds import odds_ladder
 from sports_betting_data_pipeline_spark.schemas import SPORT_EVENT, TOURNAMENT
+from sports_betting_data_pipeline_spark.sources.http import AuthError
 from sports_betting_data_pipeline_spark.session import local_frame
 
 Transport = Callable[[], object]
@@ -58,12 +59,17 @@ def snapshot_source(
     On transport absence or failure, serve ``fallback_records``
     instead — the reference's backup-constants branch
     (mm_calls.py:62-64). Raises if there is no transport AND no
-    fallback (a miss the reference would crash on too).
+    fallback (a miss the reference would crash on too). An
+    :class:`~sources.http.AuthError` is not a transport failure: a
+    rejected login stops the reference (mm_calls.py:42-44), so it
+    propagates instead of degrading into the fallback.
     """
     records: object | None = None
     if transport is not None:
         try:
             records = transport()
+        except AuthError:
+            raise
         except Exception:  # noqa: BLE001 - any transport failure -> fallback
             records = None
     if records is None:

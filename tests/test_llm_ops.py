@@ -89,14 +89,14 @@ def test_minhash_prehashed_signature_equals_string_signature(planted_docs):
     from sports_betting_data_pipeline_spark.functions.dedup import (
         minhash_signature_from_shingles,
     )
-    from sports_betting_data_pipeline_spark.functions.text import shingles
+    from sports_betting_data_pipeline_spark.functions.text import shingles_sql
 
     df, _ = planted_docs
-    sh = shingles("text", 3)
+    sh = shingles_sql("text", 3)
     rows = df.select(
         minhash_signature_from_shingles(sh, 32).alias("sig_str"),
         minhash_signature_from_shingles(
-            F.transform(sh, lambda s: F.xxhash64(s)), 32, pre_hashed=True
+            f"transform({sh}, s -> xxhash64(s))", 32, pre_hashed=True
         ).alias("sig_pre"),
     ).collect()
     assert rows and all(r.sig_str == r.sig_pre for r in rows)
@@ -497,7 +497,7 @@ def test_embedding_lsh_bucket_skew_bounded(sf01_neardup_corpus):
                 *[
                     F.struct(
                         F.lit(t).alias("table_id"),
-                        lsh_bucket(F.col("embedding"), p).alias("bucket"),
+                        lsh_bucket("embedding", p).alias("bucket"),
                     )
                     for t, p in enumerate(allp)
                 ]
@@ -843,7 +843,7 @@ def test_minhash_tokenless_docs_excluded(spark):
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     sh = {r.doc_id: r.sh for r in df.select(
-        "doc_id", shingles(F.col("text")).alias("sh")).collect()}
+        "doc_id", shingles("text").alias("sh")).collect()}
     assert sh[1] == [] and sh[2] == [] and sh[5] == []
     assert sh[3] is None
     assert sh[4] == ["real text two"]
@@ -1199,7 +1199,7 @@ def test_stopword_ratio_counts_default_stopwords(spark):
 
     df = spark.createDataFrame([("the and of cat",)], ["text"])
     row = df.select(
-        F.round(stopword_ratio(F.col("text")), 6).alias("dflt"),
+        F.round(stopword_ratio("text"), 6).alias("dflt"),
     ).collect()[0]
     assert row.dflt == 0.75     # the/and/of out of 4 tokens
 
@@ -1215,7 +1215,7 @@ def test_lang_id_single_tokenize_in_plan(spark):
         [(1, "the of and to quick brown"), (2, "el la de que en perro")],
         ["doc_id", "text"],
     )
-    out = df.select("doc_id", lang_id(F.col("text")).alias("lang"))
+    out = df.select("doc_id", lang_id("text").alias("lang"))
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("split(") == 1
     got = {r.doc_id: r.lang for r in out.collect()}
@@ -1291,7 +1291,7 @@ def test_winnowing_shared_run_guarantee(spark):
         (3, "no overlap with anything else at all in this text body"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"]).select(
-        "doc_id", winnow_fingerprints(F.col("text"), k=3, w=4).alias("fps")
+        "doc_id", winnow_fingerprints("text", k=3, w=4).alias("fps")
     )
     got = {r["doc_id"]: set(r["fps"]) for r in df.collect()}
     assert got[1] & got[2], "shared 6-token run must share a fingerprint"
@@ -1438,72 +1438,6 @@ def test_bitext_ann_noise_floor_recall_pinned(spark, sf_dir):
     assert exact
     recall = len(exact & ann) / len(exact)
     assert recall >= 0.15, recall
-
-
-def test_shared_token_base_parity(planted_docs, spark):
-    """pl02's shared-tokenization refactor (r7) must be a pure hoist:
-    shingles/quality/decontamination/chunk-dedup computed from a
-    precomputed ws_tokens array must equal the text-input originals
-    bit-for-bit (lowercasing never creates or destroys whitespace, so
-    tokenize-then-lower == lower-then-tokenize for ws splitting)."""
-    from sports_betting_data_pipeline_spark.functions.corpus import (
-        chunk_dedup_stats,
-        decontaminate_hits,
-    )
-    from sports_betting_data_pipeline_spark.functions.text import (
-        quality_score,
-        quality_score_tokens,
-        shingles,
-        shingles_from_tokens,
-        ws_tokens,
-    )
-
-    df, _ = planted_docs
-    # mixed-case + punctuation + multi-space probes on top of the
-    # planted corpus
-    extra = spark.createDataFrame(
-        [(900, "The  QUICK brown FOX!  over THE lazy dog the a an of"),
-         (901, "x"), (902, "  "), (903, "AbC dEf AbC A B C d e f g h")],
-        ["doc_id", "text"],
-    )
-    df = df.unionByName(extra)
-    toked = df.withColumn("_toks", ws_tokens(F.col("text")))
-
-    rows = toked.select(
-        (shingles(F.col("text"), 5) == shingles_from_tokens(F.col("_toks"), 5))
-        .alias("sh_eq"),
-        (
-            F.round(quality_score(F.col("text")), 9)
-            == F.round(quality_score_tokens(F.col("_toks")), 9)
-        ).alias("q_eq"),
-    ).collect()
-    assert rows and all(r.sh_eq and r.q_eq for r in rows)
-
-    bench = toked.filter(F.col("doc_id") % 7 == 0)
-    corpus = toked.filter(F.col("doc_id") % 7 != 0)
-    via_text = {
-        (r.doc_id, r.n_bench_hits)
-        for r in decontaminate_hits(corpus, bench, k=3).collect()
-    }
-    via_toks = {
-        (r.doc_id, r.n_bench_hits)
-        for r in decontaminate_hits(
-            corpus, bench, k=3, tokens_col="_toks"
-        ).collect()
-    }
-    assert via_text == via_toks and via_text
-
-    cd_text = {
-        (r.doc_id, r.n_chunks, r.n_dup_chunks, r.dup_ratio)
-        for r in chunk_dedup_stats(toked, chunk_tokens=5).collect()
-    }
-    cd_toks = {
-        (r.doc_id, r.n_chunks, r.n_dup_chunks, r.dup_ratio)
-        for r in chunk_dedup_stats(
-            toked, chunk_tokens=5, tokens_col="_toks"
-        ).collect()
-    }
-    assert cd_text == cd_toks and cd_text
 
 
 def test_size_hint_bounds_file_scans_only(spark, sf_dir):

@@ -1,9 +1,11 @@
 """scripts/measure.py end to end: the last stdout line is its JSON
 result, construction jobs are counted per query, and ``--plans``
-writes the same files on every run of one commit."""
+writes the same files on every run of one commit, with lambda variable
+names masked."""
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
 import re
@@ -20,6 +22,13 @@ _MEASURE = os.path.join(_REPO, "scripts", "measure.py")
 # nodes in completion order: two runs used to write different files
 _PLAN_QUERIES = ("q01_pricing_summary", "g01_nation_pagerank",
                  "co01_cohort_retention", "j06_bloom_prefilter_join")
+
+
+def _load_measure():
+    spec = importlib.util.spec_from_file_location("measure", _MEASURE)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
 
 
 def _measure(sf_dir: str, plans_dir, *queries: str) -> dict:
@@ -68,3 +77,29 @@ def test_measure_rejects_unknown_query_before_spark_starts():
     assert proc.returncode != 0
     assert "['definitely_not_a_query']" in proc.stderr
     assert "log4j" not in proc.stderr and not proc.stdout
+
+
+def test_plan_mask_hides_lambda_variable_names(spark):
+    """A lambda built through Column operators is named from PySpark's
+    process-global counter (``lambda x_12``), the same lambda parsed
+    from SQL text keeps its own name (``lambda t``): the written plans
+    must not tell them apart, while a real tree difference still shows."""
+    from pyspark.sql import functions as F
+
+    measure = _load_measure()
+    assert (measure.mask_run_ids("lambdafunction(NOT (lambda x_12#345 = ), "
+                                 "lambda x_12#345, false), plan_id=7")
+            == "lambdafunction(NOT (lambda _# = ), lambda _#, false), plan_id=")
+    assert (measure.mask_run_ids("lambda t#9 = lambda toks#10")
+            == "lambda _# = lambda _#")
+
+    df = spark.createDataFrame([("a  b",)], "text string")
+    built = df.select(F.filter(F.split("text", r"\s+"), lambda t: t != "").alias("a"))
+    parsed = df.select(F.expr("filter(split(text, '\\\\s+'), t -> t != '')").alias("a"))
+    other = df.select(F.expr("filter(split(text, '\\\\s+'), t -> t != 'b')").alias("a"))
+    raw = [d._jdf.queryExecution().optimizedPlan().toString() for d in (built, parsed)]
+    assert "lambda x_" in raw[0] and "lambda t#" in raw[1]
+    built_txt, parsed_txt, other_txt = (
+        measure.plan_text(d._jdf.queryExecution()) for d in (built, parsed, other))
+    assert built_txt == parsed_txt
+    assert other_txt != parsed_txt

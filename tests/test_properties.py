@@ -6,6 +6,8 @@ single-token docs, boundary odds)."""
 from __future__ import annotations
 
 import datetime
+import math
+import re
 
 import pytest
 
@@ -39,8 +41,14 @@ def test_snap_always_nearest_rung(spark, vals):
         assert row.s == best, f"v={row.v}: got {row.s}, want {best}"
 
 
+def _java_ws_tokens(text: str) -> list[str]:
+    """Split on Java regex ``\\s`` (ASCII ``[ \\t\\n\\x0B\\f\\r]``, not
+    ``str.split()``'s Unicode whitespace), dropping empty tokens."""
+    return [t for t in re.split(r"[ \t\n\x0b\f\r]+", text) if t]
+
+
 def _py_shingles(text: str, k: int = 3) -> list[str]:
-    toks = [t for t in text.lower().split() if t]
+    toks = _java_ws_tokens(text.lower())
     if not toks:
         return []
     if len(toks) < k:
@@ -65,9 +73,12 @@ def _py_shingles(text: str, k: int = 3) -> list[str]:
     )
 )
 @settings(**_SETTINGS)
+# mixed case, punctuation, runs of spaces, a 1-token and a blank doc
+@example(texts=["The  QUICK brown FOX!  over THE lazy dog the a an of", "x",
+                "  ", "AbC dEf AbC A B C d e f g h"])
 def test_shingles_match_python_reference(spark, texts):
     df = spark.createDataFrame([(t,) for t in texts], ["t"])
-    got = [r.s for r in df.select(shingles(F.col("t"), 3).alias("s")).collect()]
+    got = [r.s for r in df.select(shingles("t", 3).alias("s")).collect()]
     want = [_py_shingles(t, 3) for t in texts]
     # Spark's regex split of "" yields [""] -> filtered -> [] joined to [""];
     # normalize the all-whitespace case the same way on both sides.
@@ -181,7 +192,7 @@ def test_pack_sequences_matches_python_reference(spark, docs):
     # indistinguishable from tokenizing text_col itself
     from sports_betting_data_pipeline_spark.functions.text import ws_tokens
 
-    pre = df.withColumn("ntc", F.size(ws_tokens(F.col("text"))))
+    pre = df.withColumn("ntc", F.size(ws_tokens("text")))
     got_pre = {
         r.doc_id: (r.n_tokens, r.start_bin, r.end_bin, r.start_off)
         for r in pack_sequences(
@@ -440,8 +451,8 @@ def test_token_budget_two_phase_equals_naive_global_window(
 
     scored = df.select(
         "doc_id",
-        F.round(quality_score(F.col("text")), 6).alias("quality"),
-        ws_token_count(F.col("text")).alias("n_tokens"),
+        F.round(quality_score("text"), 6).alias("quality"),
+        ws_token_count("text").alias("n_tokens"),
     )
     w = Window.orderBy(F.col("quality").desc(), F.col("doc_id")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -659,12 +670,12 @@ def test_blocked_nearest_neighbor_certification_is_exact(spark, data):
         max_size=16,
     )
 )
-def test_similarity_string_fast_path_is_bit_identical(spark, pairs):
-    """dot/l2_norm/cosine's server-parsed string form must stay
-    BIT-identical to the Column-operator form (the fast path's whole
-    correctness argument; oracle hashes depend on it). Exact ==, not
-    approx: the two forms must produce the same expression tree, so
-    any float divergence at all is a regression."""
+def test_similarity_matches_python_left_fold(spark, pairs):
+    """dot/l2_norm/cosine equal a Python left fold over the pairs
+    (``acc = 0.0; acc += x*y``, ``math.sqrt``, ``max(na*nb, 1e-12)``).
+    That fold is the order Spark's ``aggregate`` adds in, so the values
+    match exactly: any float divergence at all is a regression (oracle
+    hashes depend on it)."""
     from sports_betting_data_pipeline_spark.functions.similarity import (
         cosine,
         dot,
@@ -677,16 +688,21 @@ def test_similarity_string_fast_path_is_bit_identical(spark, pairs):
         [(a, b)], "va: array<double>, vb: array<double>"
     )
     row = df.select(
-        dot("va", "vb").alias("dot_s"),
-        dot(F.col("va"), F.col("vb")).alias("dot_c"),
-        l2_norm("va").alias("n_s"),
-        l2_norm(F.col("va")).alias("n_c"),
-        cosine("va", "vb").alias("cos_s"),
-        cosine(F.col("va"), F.col("vb")).alias("cos_c"),
+        dot("va", "vb").alias("dot"),
+        l2_norm("va").alias("norm"),
+        cosine("va", "vb").alias("cos"),
     ).collect()[0]
-    assert row["dot_s"] == row["dot_c"], pairs
-    assert row["n_s"] == row["n_c"], pairs
-    assert row["cos_s"] == row["cos_c"], pairs
+
+    def fold(xs, ys):
+        acc = 0.0
+        for x, y in zip(xs, ys):
+            acc += x * y
+        return acc
+
+    na, nb = math.sqrt(fold(a, a)), math.sqrt(fold(b, b))
+    assert row["dot"] == fold(a, b), pairs
+    assert row["norm"] == na, pairs
+    assert row["cos"] == fold(a, b) / max(na * nb, 1e-12), pairs
 
 
 @settings(
@@ -701,41 +717,48 @@ def test_similarity_string_fast_path_is_bit_identical(spark, pairs):
     ),
     st.integers(1, 4),
 )
-def test_text_string_fast_paths_are_bit_identical(spark, text, k):
-    """ws_tokens/shingles/minhash-signature server-parsed string forms
-    must stay BIT-identical to the Column-operator forms — including
-    on texts containing quotes, backslashes, tabs and non-ASCII, which
-    exercise the SQL-literal escaping in the generated expression
-    text."""
+def test_text_builders_match_python_tokenizer(spark, text, k):
+    """ws_tokens and shingles equal a Python tokenizer that splits on
+    Java's ``\\s`` set, and the MinHash signature equals a relational
+    reference (explode the shingles and the seeds, then
+    ``min(xxhash64(xxhash64(s), i))`` per seed) — on texts holding
+    quotes, backslashes, tabs and non-ASCII, which exercise the SQL
+    literal escaping in the generated expression text."""
     from sports_betting_data_pipeline_spark.functions.dedup import (
         minhash_signature_from_shingles,
     )
     from sports_betting_data_pipeline_spark.functions.text import (
-        shingles,
+        shingles_sql,
         ws_tokens,
     )
 
+    n = 8
     df = spark.createDataFrame([(text,)], "t: string")
-    sh_s = shingles("t", k)
-    sh_c = shingles(F.col("t"), k)
     row = df.select(
-        ws_tokens("t").alias("wt_s"),
-        ws_tokens(F.col("t")).alias("wt_c"),
-        sh_s.alias("sh_s"),
-        sh_c.alias("sh_c"),
-        minhash_signature_from_shingles(sh_s, 8).alias("sig_c2"),
+        ws_tokens("t").alias("toks"),
+        shingles("t", k).alias("sh"),
+        minhash_signature_from_shingles(shingles_sql("t", k), n).alias("sig"),
     ).collect()[0]
-    assert row["wt_s"] == row["wt_c"], repr(text)
-    assert row["sh_s"] == row["sh_c"], repr(text)
-    # the string signature path reads a named column; compare via a
-    # second select over the materialized shingle column
-    df2 = spark.createDataFrame([(row["sh_s"],)], "sh: array<string>")
-    row2 = df2.select(
-        minhash_signature_from_shingles("sh", 8).alias("sig_s"),
-        minhash_signature_from_shingles(F.col("sh"), 8).alias("sig_c"),
-    ).collect()[0]
-    assert row2["sig_s"] == row2["sig_c"], repr(text)
-    assert row2["sig_s"] == row["sig_c2"], repr(text)
+    assert row["toks"] == _java_ws_tokens(text), repr(text)
+    assert row["sh"] == _py_shingles(text, k), repr(text)
+
+    sh = spark.createDataFrame([(row["sh"],)], "sh: array<string>")
+    pre = sh.select(
+        minhash_signature_from_shingles(
+            "transform(sh, s -> xxhash64(s))", n, pre_hashed=True
+        ).alias("sig")
+    ).collect()[0]["sig"]
+    seeds = spark.range(n).select(F.col("id").cast("int").alias("i"))
+    mins = dict(
+        sh.select(F.explode("sh").alias("s"))
+        .crossJoin(seeds)
+        .groupBy("i")
+        .agg(F.min(F.xxhash64(F.xxhash64("s"), "i")).alias("m"))
+        .collect()
+    )
+    want = [mins.get(i, (1 << 63) - 1) for i in range(n)]
+    assert row["sig"] == want, repr(text)
+    assert pre == want, repr(text)
 
 
 @settings(

@@ -460,6 +460,38 @@ def test_http_transport_propagates_auth_error_no_fallback():
     assert calls["n"] == 0  # failed before any network attempt, no retries
 
 
+def test_odds_ladder_source_propagates_auth_error(spark):
+    """A never-logged-in authenticated transport stops the S1 scan with
+    AuthError instead of serving the constants fallback ladder."""
+    from sports_betting_data_pipeline_spark.sources.http import (
+        AuthError,
+        HttpTransport,
+    )
+
+    class _NeverLoggedIn:
+        def maybe_refresh(self):
+            raise AuthError("not logged in")
+
+        def auth_headers(self):  # pragma: no cover - unreachable
+            return {}
+
+    def getter(url, headers=None):  # pragma: no cover - unreachable
+        return 200, b"[]"
+
+    t = HttpTransport("https://example.test/ladder", getter, auth=_NeverLoggedIn())
+    with pytest.raises(AuthError):
+        odds_ladder_source(spark, t)
+
+    # a plain transport failure still falls back to the generated ladder
+    def down(url, headers=None):
+        return 503, b""
+
+    fallback = odds_ladder_source(
+        spark, HttpTransport("https://example.test/ladder", down, sleep=lambda s: None)
+    )
+    assert fallback.count() == len(odds_ladder())
+
+
 def test_auth_session_failed_login_raises_failed_refresh_keeps_token():
     import pytest as _pytest
 
